@@ -115,7 +115,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: PageRank over the part co-occurrence graph (sf0.001)."""
     sf_dir = "/root/testdata/sf0.001"
     g = Graph.from_edges(_part_edges(spark, sf_dir))
-    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS, stats_interval=5)
+    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS)
     return (
         res.scores.select("vid", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("vid"))
@@ -128,14 +128,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _q_pagerank(spark, sf_dir):
     g = Graph.from_edges(_part_edges(spark, sf_dir))
-    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS, stats_interval=5)
+    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS)
     return res.scores.select("vid", F.round("score", 5).alias("score"))
 
 
 def _q_pagerank_weighted(spark, sf_dir):
     g = Graph.from_edges(_cs_edges(spark, sf_dir))
-    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS, weighted=True,
-                    stats_interval=5)
+    res = page_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS, weighted=True)
     return res.scores.select("vid", F.round("score", 5).alias("score"))
 
 
@@ -147,12 +146,12 @@ def _cs_edges_small(spark, sf_dir):
 
 def _q_wcc(spark, sf_dir):
     g = Graph.from_edges(_cs_edges_small(spark, sf_dir))
-    return wcc(g, stats_interval=4).components.select("vid", "component")
+    return wcc(g).components.select("vid", "component")
 
 
 def _q_wcc_threshold(spark, sf_dir):
     g = Graph.from_edges(_cs_edges_small(spark, sf_dir))
-    return wcc(g, threshold=1.5, stats_interval=4).components.select("vid", "component")
+    return wcc(g, threshold=1.5).components.select("vid", "component")
 
 
 def _q_lpa(spark, sf_dir):
@@ -523,7 +522,7 @@ def _q_sssp_paths(spark, sf_dir):
     edges = _cs_edges_small(spark, sf_dir)
     src = edges.agg(F.min("src")).collect()[0][0]
     g = Graph.from_edges(edges, orientation=Orientation.UNDIRECTED)
-    res = dijkstra(g, source=int(src), max_iterations=SSSP_UNROLLED, stats_interval=5)
+    res = dijkstra(g, source=int(src), max_iterations=SSSP_UNROLLED)
     # loud failure instead of silent row-set divergence vs the oracle: if
     # SSSP_UNROLLED rounds ever stop sufficing (data/SF change), walks would
     # end at a null parent mid-chain while the oracle's `w.cur = b.sid`
@@ -550,8 +549,7 @@ def _q_bellman(spark, sf_dir):
     edges = _cs_edges_small(spark, sf_dir)
     src = edges.agg(F.min("src")).collect()[0][0]
     g = Graph.from_edges(edges, orientation=Orientation.UNDIRECTED)
-    res = bellman_ford(g, source=int(src), max_iterations=SSSP_UNROLLED,
-                       stats_interval=5)
+    res = bellman_ford(g, source=int(src), max_iterations=SSSP_UNROLLED)
     assert not res.contains_negative_cycle
     assert res.did_converge, "bellman did not converge - raise SSSP_UNROLLED"
     return res.distances.filter(F.col("distance") < float("inf")).select(
@@ -601,8 +599,7 @@ def _q_astar(spark, sf_dir):
 
     nodes, edges = _geo_edges(spark, sf_dir)
     g = Graph.from_edges(edges, nodes=nodes, orientation=Orientation.UNDIRECTED)
-    res = astar(g, source=1, target=199, max_iterations=ASTAR_UNROLLED,
-                stats_interval=6)
+    res = astar(g, source=1, target=199, max_iterations=ASTAR_UNROLLED)
     assert res.did_converge, "astar did not converge - raise ASTAR_UNROLLED"
     return res.paths.select(
         "source_node", "target_node", F.round("total_cost", 4).alias("total_cost")
@@ -1730,7 +1727,7 @@ def _q_bfs(spark, sf_dir):
     edges = _cs_edges_small(spark, sf_dir)
     src = edges.agg(F.min("src")).collect()[0][0]
     g = Graph.from_edges(edges, orientation=Orientation.UNDIRECTED)
-    res = bfs(g, [int(src)], max_iterations=SSSP_UNROLLED, stats_interval=5)
+    res = bfs(g, [int(src)], max_iterations=SSSP_UNROLLED)
     assert res.did_converge, "bfs did not converge - raise SSSP_UNROLLED"
     return res.distances.filter(F.col("distance") < float("inf")).select(
         "vid", F.col("distance").cast("double").alias("distance")
@@ -2577,8 +2574,7 @@ def _q_article_rank(spark, sf_dir):
     from graph_data_science_spark.operators.pagerank import article_rank
 
     g = Graph.from_edges(_cs_edges(spark, sf_dir))
-    res = article_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS,
-                       stats_interval=5)
+    res = article_rank(g, tolerance=0, max_iterations=PR_MAX_ITERATIONS)
     return res.scores.select("vid", F.round("score", 5).alias("score"))
 
 

@@ -45,12 +45,8 @@ def bench_pagerank(spark, backend: str) -> dict:
     g.nodes.count()
 
     t0 = time.time()
-    # stats_interval=5: convergence detected at the next multiple of 5
-    # (ran_iterations is then an upper bound within 4 supersteps) — the
-    # per-superstep driver overhead would otherwise dominate the metric
     res = page_rank(
-        g, damping_factor=0.85, tolerance=1e-6, max_iterations=100,
-        backend=backend, stats_interval=5,
+        g, damping_factor=0.85, tolerance=1e-6, max_iterations=100, backend=backend,
     )
     res.scores.count()
     wall = time.time() - t0
@@ -110,7 +106,7 @@ def warmup(spark) -> None:
     g.nodes.persist().count()
     for backend in ("sql", "csr"):
         page_rank(g, damping_factor=0.85, tolerance=1e-3, max_iterations=6,
-                  backend=backend, stats_interval=3).scores.count()
+                  backend=backend).scores.count()
     g.edges.unpersist()
     g.nodes.unpersist()
 

@@ -14,8 +14,8 @@ improve the target once that fails, and dist(target) only decreases).
 
 The bound is a masterCompute-style global: it rides the per-superstep
 stats aggregate (min dist over the target row) and is folded into the
-next superstep's plan as a LITERAL. Between stats checks the bound is
-stale, i.e. an upper bound on the live target distance — pruning with a
+next superstep's plan as a LITERAL. The literal is one superstep stale,
+i.e. an upper bound on the live target distance — pruning with a
 larger bound is still admissible (g+h > B >= dist* implies the node
 cannot improve the target), it just prunes less. The earlier design
 cross-joined the 1-row bound from the state itself; that made the step
@@ -70,7 +70,6 @@ def astar(
     longitude_col: str = "longitude",
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 5,
 ) -> AStarResult:
     """gds.shortestPath.astar. Node DataFrame must carry the latitude /
     longitude property columns (AStar.sourceTarget validates the same)."""
@@ -106,9 +105,9 @@ def astar(
         ).alias("h"),
     )
 
-    # driver-held target bound; refreshed from the stats aggregate at
-    # every stats_interval boundary (see module docstring for why a
-    # literal beats joining the 1-row bound back into the plan)
+    # driver-held target bound; refreshed from the stats aggregate after
+    # every superstep (see module docstring for why a literal beats
+    # joining the 1-row bound back into the plan)
     bound = {"v": _INF}
 
     def step(state: DataFrame, s: int) -> DataFrame:
@@ -156,7 +155,6 @@ def astar(
         ],
         converged=_converged,
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     state = result.state.select("vid", "dist", "parent").persist()
     tdf = state.filter((F.col("vid") == target) & (F.col("dist") < _INF)).select("vid")

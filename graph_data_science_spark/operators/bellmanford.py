@@ -55,7 +55,6 @@ def bellman_ford(
     track_negative_cycles: bool = True,
     max_iterations: int | None = None,
     engine: PregelEngine | None = None,
-    stats_interval: int = 5,
 ) -> BellmanFordResult:
     """gds.bellmanFord. max_iterations defaults to nodeCount + 2 (enough
     to push any tentative length past the n+1 cycle bound)."""
@@ -130,7 +129,6 @@ def bellman_ford(
         converged=lambda st: (st["changed_count"] or 0) == 0
         or (st["max_length"] or 0) > length_bound,
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     state = result.state.select("vid", "dist", "parent", "length").persist()
     overflowed = state.filter(F.col("length") > length_bound)

@@ -53,7 +53,6 @@ def _parent_fixpoint(
     source: int,
     max_iterations: int,
     engine: PregelEngine | None,
-    stats_interval: int,
 ) -> tuple[DataFrame, int, bool, list]:
     """Min-relaxation with parent tracking. State: (vid, dist, parent,
     changed). Message = struct(cand_dist, sender); min over structs picks
@@ -107,7 +106,6 @@ def _parent_fixpoint(
         stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
         converged=lambda st: (st["changed_count"] or 0) == 0,
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     edges.unpersist()
     return result.state, result.ran_iterations, result.did_converge, result.metrics
@@ -272,7 +270,6 @@ def dijkstra(
     targets: Iterable[int] | None = None,
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 5,
 ) -> DijkstraResult:
     """Shortest paths from `source` with full path reconstruction.
 
@@ -281,9 +278,7 @@ def dijkstra(
     Result rows mirror the reference's PathFindingResult:
     (index, source_node, target_node, total_cost, node_ids, costs).
     """
-    state, ran, conv, metrics = _parent_fixpoint(
-        graph, source, max_iterations, engine, stats_interval
-    )
+    state, ran, conv, metrics = _parent_fixpoint(graph, source, max_iterations, engine)
     # Deterministic shortest-path TREE: the fixpoint's parent is the min
     # sender among the EARLIEST-settling optimal predecessors (an artifact
     # of relaxation order); recompute it as the GLOBAL min optimal

@@ -64,7 +64,7 @@ def sessionize(
             "session_idx",
             F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        .drop("_new")
+        .drop("_new", "_us")
     )
 
 
@@ -78,13 +78,14 @@ def session_stats(
     """Per-session aggregates: (user_id, session_idx, n_events,
     start_us, duration_us, total_value). Micros are exact bigints;
     total_value follows the repo's round(...,5)+0.0 hash convention."""
+    us = _us(F.col(ts_col))
     return (
         sessionize(events, gap_minutes, user_col, ts_col)
         .groupBy(user_col, "session_idx")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.min("_us").alias("start_us"),
-            (F.max("_us") - F.min("_us")).alias("duration_us"),
+            F.min(us).alias("start_us"),
+            (F.max(us) - F.min(us)).alias("duration_us"),
             (F.round(F.sum(value_col), 5) + F.lit(0.0)).alias("total_value"),
         )
     )

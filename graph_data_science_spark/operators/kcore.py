@@ -36,7 +36,6 @@ def k_core_decomposition(
     graph: Graph,
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 1,
 ) -> KCoreResult:
     spark = graph.edges.sparkSession
     e = graph.edges
@@ -80,7 +79,6 @@ def k_core_decomposition(
         stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
         converged=lambda st: (st["changed_count"] or 0) == 0,
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     e.unpersist()
     return KCoreResult(

@@ -149,13 +149,13 @@ def _local_move(
     iters = 0
     eps = 1e-12
     w_node = Window.partitionBy("vid")
-    # color-round chaining (the PregelEngine stats_interval trick): stay
-    # LAZY for _COLOR_CHAIN rounds via localCheckpoint(eager=False) — the
-    # plan is cut at an RDD boundary so the 4-reference fan-out per round
-    # grows a shared DAG, not a 4^rounds tree — then cut_lineage (eager,
-    # stats-reset) closes each chain before Catalyst's size-stats compound
-    # (the BigInteger blowup lineage.py documents). One materialization
-    # job per chain instead of one per color class; results identical.
+    # color-round chaining: stay LAZY for _COLOR_CHAIN rounds via
+    # localCheckpoint(eager=False) — the plan is cut at an RDD boundary so
+    # the 4-reference fan-out per round grows a shared DAG, not a 4^rounds
+    # tree — then cut_lineage (eager, stats-reset) closes each chain before
+    # Catalyst's size-stats compound (the BigInteger blowup lineage.py
+    # documents). One materialization job per chain instead of one per
+    # color class; results identical.
     for it in range(max_iterations):
         pre_sweep = assign  # snapshot: revert target if this sweep lowers Q
         for ci, col_id in enumerate(color_list):
@@ -372,129 +372,129 @@ def louvain(
     # runtime re-planning needed, same reasoning as PregelEngine.
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    edges = _canonical_edges(graph).filter(F.col("src") != F.col("dst"))
-    self_w = (
-        _canonical_edges(graph)
-        .filter(F.col("src") == F.col("dst"))
-        .groupBy(F.col("src").alias("vid"))
-        .agg(F.sum("weight").alias("w_self"))
-    )
-    node_ids = graph.nodes.select("vid")
-    m_row = edges.agg(F.sum("weight")).collect()[0][0] or 0.0
-    m = float(m_row) + float(self_w.agg(F.sum("w_self")).collect()[0][0] or 0.0)
-    if m <= 0:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        return LouvainResult(
-            communities=node_ids.select("vid", F.col("vid").alias("community")),
-            ran_levels=0,
-        )
-
-    seed_assign = None
-    if seed is not None:
-        # unseeded nodes get unique ids past the max seed (InitStep-style
-        # collision freedom)
-        max_seed = seed.agg(F.max("seed")).collect()[0][0] or 0
-        seed_assign = node_ids.join(seed, "vid", "left").select(
-            "vid", F.coalesce(F.col("seed"), F.col("vid") + F.lit(max_seed + 1)).alias("community")
-        )
-
-    root_map = node_ids.select("vid", F.col("vid").alias("node"))
-    dendrogram: list[DataFrame] = []
-    modularities: list[float] = []
-    old_count = graph.node_count()
-    ran_levels = 0
-    did_converge = False
-
-    edges = edges.persist()
-    self_w = self_w.persist()
-    level_nodes = node_ids
-
-    for level in range(max_levels):
-        assign, q, _iters = _local_move(
-            edges, self_w, level_nodes, m, max_iterations, tolerance, gamma,
-            seed_assign if level == 0 else None,
-        )
-        # Level convergence (hasConverged :264-272) mirrors the reference's
-        # loop structure: a level whose modularity does not improve by more
-        # than tolerance is DISCARDED — resizeResultArrays truncates the
-        # dendrogram/modularities to ranLevels, so the converging level's
-        # assignment never appears in the result.
-        if level > 0 and not (
-            q > modularities[level - 1] and abs(q - modularities[level - 1]) > tolerance
-        ):
-            did_converge = True
-            break
-        # relabel to min member node id (node ids at level l ARE root vids,
-        # so the final community id = min root vid in the community) —
-        # except when seeded: seed labels are the community ids and must be
-        # preserved in the output (LouvainTest.testSeeded:239-252)
-        if not (seed is not None and level == 0):
-            relabel = assign.groupBy("community").agg(F.min("vid").alias("new_c"))
-            assign = assign.join(relabel, "community").select(
-                "vid", F.col("new_c").alias("community")
-            )
-        assign = assign.transform(cut_lineage)
-        ran_levels = level + 1
-        modularities.append(q)
-        root_map = (
-            root_map.join(
-                assign.select(F.col("vid").alias("node"), "community"), "node"
-            )
-            .select("vid", F.col("community").alias("node"))
-            .transform(cut_lineage)
-        )
-        if include_intermediate:
-            dendrogram.append(root_map.select("vid", F.col("node").alias("community")))
-
-        new_count = assign.select("community").distinct().count()
-        if new_count == old_count or new_count == 1:
-            did_converge = new_count == 1
-            break
-        old_count = new_count
-
-        # condense (summarizeGraph): communities -> nodes, intra -> self-loops
-        a_u = assign.select(F.col("vid").alias("src"), F.col("community").alias("cu"))
-        a_v = assign.select(F.col("vid").alias("dst"), F.col("community").alias("cv"))
-        tagged = edges.join(a_u, "src").join(a_v, "dst")
-        new_self = (
-            tagged.filter(F.col("cu") == F.col("cv"))
-            .select(F.col("cu").alias("vid"), "weight")
-            .unionByName(
-                self_w.join(assign, "vid").select(
-                    F.col("community").alias("vid"), F.col("w_self").alias("weight")
-                )
-            )
-            .groupBy("vid")
+    try:
+        edges = _canonical_edges(graph).filter(F.col("src") != F.col("dst"))
+        self_w = (
+            _canonical_edges(graph)
+            .filter(F.col("src") == F.col("dst"))
+            .groupBy(F.col("src").alias("vid"))
             .agg(F.sum("weight").alias("w_self"))
         )
-        new_edges = (
-            tagged.filter(F.col("cu") != F.col("cv"))
-            .select(
-                F.least("cu", "cv").alias("src"),
-                F.greatest("cu", "cv").alias("dst"),
-                "weight",
+        node_ids = graph.nodes.select("vid")
+        m_row = edges.agg(F.sum("weight")).collect()[0][0] or 0.0
+        m = float(m_row) + float(self_w.agg(F.sum("w_self")).collect()[0][0] or 0.0)
+        if m <= 0:
+            return LouvainResult(
+                communities=node_ids.select("vid", F.col("vid").alias("community")),
+                ran_levels=0,
             )
-            .groupBy("src", "dst")
-            .agg(F.sum("weight").alias("weight"))
-        )
-        old_edges, old_self = edges, self_w
-        edges = new_edges.transform(cut_lineage)
-        self_w = new_self.transform(cut_lineage)
-        old_edges.unpersist()
-        old_self.unpersist()
-        level_nodes = assign.select(F.col("community").alias("vid")).distinct()
 
-    edges.unpersist()
-    self_w.unpersist()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-    spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    communities = root_map.select("vid", F.col("node").alias("community"))
-    return LouvainResult(
-        communities=communities,
-        ran_levels=ran_levels,
-        modularities=modularities,
-        did_converge=did_converge,
-        dendrogram=dendrogram if include_intermediate else None,
-    )
+        seed_assign = None
+        if seed is not None:
+            # unseeded nodes get unique ids past the max seed (InitStep-style
+            # collision freedom)
+            max_seed = seed.agg(F.max("seed")).collect()[0][0] or 0
+            seed_assign = node_ids.join(seed, "vid", "left").select(
+                "vid",
+                F.coalesce(F.col("seed"), F.col("vid") + F.lit(max_seed + 1)).alias("community"),
+            )
+
+        root_map = node_ids.select("vid", F.col("vid").alias("node"))
+        dendrogram: list[DataFrame] = []
+        modularities: list[float] = []
+        old_count = graph.node_count()
+        ran_levels = 0
+        did_converge = False
+
+        edges = edges.persist()
+        self_w = self_w.persist()
+        level_nodes = node_ids
+
+        for level in range(max_levels):
+            assign, q, _iters = _local_move(
+                edges, self_w, level_nodes, m, max_iterations, tolerance, gamma,
+                seed_assign if level == 0 else None,
+            )
+            # Level convergence (hasConverged :264-272) mirrors the reference's
+            # loop structure: a level whose modularity does not improve by more
+            # than tolerance is DISCARDED — resizeResultArrays truncates the
+            # dendrogram/modularities to ranLevels, so the converging level's
+            # assignment never appears in the result.
+            if level > 0 and not (
+                q > modularities[level - 1] and abs(q - modularities[level - 1]) > tolerance
+            ):
+                did_converge = True
+                break
+            # relabel to min member node id (node ids at level l ARE root vids,
+            # so the final community id = min root vid in the community) —
+            # except when seeded: seed labels are the community ids and must be
+            # preserved in the output (LouvainTest.testSeeded:239-252)
+            if not (seed is not None and level == 0):
+                relabel = assign.groupBy("community").agg(F.min("vid").alias("new_c"))
+                assign = assign.join(relabel, "community").select(
+                    "vid", F.col("new_c").alias("community")
+                )
+            assign = assign.transform(cut_lineage)
+            ran_levels = level + 1
+            modularities.append(q)
+            root_map = (
+                root_map.join(
+                    assign.select(F.col("vid").alias("node"), "community"), "node"
+                )
+                .select("vid", F.col("community").alias("node"))
+                .transform(cut_lineage)
+            )
+            if include_intermediate:
+                dendrogram.append(root_map.select("vid", F.col("node").alias("community")))
+
+            new_count = assign.select("community").distinct().count()
+            if new_count == old_count or new_count == 1:
+                did_converge = new_count == 1
+                break
+            old_count = new_count
+
+            # condense (summarizeGraph): communities -> nodes, intra -> self-loops
+            a_u = assign.select(F.col("vid").alias("src"), F.col("community").alias("cu"))
+            a_v = assign.select(F.col("vid").alias("dst"), F.col("community").alias("cv"))
+            tagged = edges.join(a_u, "src").join(a_v, "dst")
+            new_self = (
+                tagged.filter(F.col("cu") == F.col("cv"))
+                .select(F.col("cu").alias("vid"), "weight")
+                .unionByName(
+                    self_w.join(assign, "vid").select(
+                        F.col("community").alias("vid"), F.col("w_self").alias("weight")
+                    )
+                )
+                .groupBy("vid")
+                .agg(F.sum("weight").alias("w_self"))
+            )
+            new_edges = (
+                tagged.filter(F.col("cu") != F.col("cv"))
+                .select(
+                    F.least("cu", "cv").alias("src"),
+                    F.greatest("cu", "cv").alias("dst"),
+                    "weight",
+                )
+                .groupBy("src", "dst")
+                .agg(F.sum("weight").alias("weight"))
+            )
+            old_edges, old_self = edges, self_w
+            edges = new_edges.transform(cut_lineage)
+            self_w = new_self.transform(cut_lineage)
+            old_edges.unpersist()
+            old_self.unpersist()
+            level_nodes = assign.select(F.col("community").alias("vid")).distinct()
+
+        edges.unpersist()
+        self_w.unpersist()
+        communities = root_map.select("vid", F.col("node").alias("community"))
+        return LouvainResult(
+            communities=communities,
+            ran_levels=ran_levels,
+            modularities=modularities,
+            did_converge=did_converge,
+            dendrogram=dendrogram if include_intermediate else None,
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

@@ -53,7 +53,6 @@ def label_propagation(
     node_weight_col: str | None = None,
     engine: PregelEngine | None = None,
     resume: bool = False,
-    stats_interval: int = 1,
     mode: str = "sync",  # sync | block_async | async_serial
     blocks: int = 16,
 ) -> LpaResult:
@@ -142,7 +141,6 @@ def label_propagation(
         converged=lambda st: (st["changed_count"] or 0) == 0,
         max_iterations=max_iterations,
         resume=resume,
-        stats_interval=stats_interval,
     )
     edges.unpersist()
     return LpaResult(

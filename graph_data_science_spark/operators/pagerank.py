@@ -67,7 +67,6 @@ def page_rank(
     engine: PregelEngine | None = None,
     resume: bool = False,
     normalized: bool = False,
-    stats_interval: int = 1,
 ) -> CentralityResult:
     spark = graph.edges.sparkSession
     alpha = 1.0 - damping_factor
@@ -87,7 +86,6 @@ def page_rank(
             mode=mode,
             engine=engine,
             resume=resume,
-            stats_interval=stats_interval,
         )
 
     deg = graph.degrees(weighted=weighted, direction="out")
@@ -203,7 +201,6 @@ def page_rank(
         converged=lambda st: st["sent"] == 0 and st["active"] == 0,
         max_iterations=max_iterations,
         resume=resume,
-        stats_interval=stats_interval,
     )
     if dangling_ids is not None:
         dangling_ids.unpersist()

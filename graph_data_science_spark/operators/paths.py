@@ -46,7 +46,6 @@ def _distance_fixpoint(
     edge_cost,
     max_iterations: int,
     engine: PregelEngine | None,
-    stats_interval: int = 1,
 ) -> PathResult:
     """Generic min-distance relaxation: dist' = min(dist, min over
     in-edges (dist(src) + cost)); senders = nodes whose dist improved
@@ -94,7 +93,6 @@ def _distance_fixpoint(
         stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
         converged=lambda st: (st["changed_count"] or 0) == 0,
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     edges.unpersist()
     return PathResult(
@@ -110,12 +108,9 @@ def bfs(
     source_nodes: Iterable[int],
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 1,
 ) -> PathResult:
     """Hop distance from the source set (gds.bfs level semantics)."""
-    return _distance_fixpoint(
-        graph, source_nodes, F.lit(1.0), max_iterations, engine, stats_interval
-    )
+    return _distance_fixpoint(graph, source_nodes, F.lit(1.0), max_iterations, engine)
 
 
 def sssp(
@@ -123,21 +118,17 @@ def sssp(
     source_nodes: Iterable[int],
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 1,
 ) -> PathResult:
     """Weighted shortest-path distances (Bellman-Ford relaxation to
     fixpoint — same results as delta-stepping; requires non-negative
     weights for the iteration bound to be meaningful)."""
-    return _distance_fixpoint(
-        graph, source_nodes, F.col("weight"), max_iterations, engine, stats_interval
-    )
+    return _distance_fixpoint(graph, source_nodes, F.col("weight"), max_iterations, engine)
 
 
 def topological_sort(
     graph: Graph,
     max_iterations: int = 1000,
     engine: PregelEngine | None = None,
-    stats_interval: int = 8,
 ) -> DataFrame:
     """(vid, layer): in-degree-decrement peeling on the PregelEngine;
     layer = longest path from any source (gds.dag.topologicalSort +
@@ -201,7 +192,6 @@ def topological_sort(
         converged=lambda st: (st["max_layer"] if st["max_layer"] is not None else -1)
         < st["superstep"],
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     edges.unpersist()
     return res.state.select("vid", "layer")
@@ -211,7 +201,6 @@ def longest_path(
     graph: Graph,
     max_iterations: int = 1000,
     engine: PregelEngine | None = None,
-    stats_interval: int = 8,
 ) -> DataFrame:
     """gds.dag.longestPath (algo/.../dag/longestPath/DagLongestPath.java):
     the WEIGHTED longest path from any zero-in-degree source to each node,
@@ -298,7 +287,6 @@ def longest_path(
         converged=lambda st: (st["max_layer"] if st["max_layer"] is not None else -1)
         < st["superstep"],
         max_iterations=max_iterations,
-        stats_interval=stats_interval,
     )
     edges.unpersist()
 

@@ -14,18 +14,21 @@ bits. On Spark there is no shared memory across executors, so:
                              checkpointed parquet scan
   - masterCompute         -> driver code between supersteps (the
                              `converged` callback over per-superstep stats)
-  - iteration memory      -> localCheckpoint (eager) per superstep to cut
-                             lineage + durable parquet/Iceberg snapshot
-                             every `checkpoint_interval` supersteps for
-                             resume (our addition; reference is in-memory
-                             only)
+  - iteration memory      -> one eager localCheckpoint per superstep cuts
+                             the lineage; a durable parquet/Iceberg snapshot
+                             replaces it every `checkpoint_interval`
+                             supersteps for resume (our addition; reference
+                             is in-memory only)
 
 The engine is algorithm-agnostic: an algorithm provides
   step(state, superstep) -> new state DataFrame
-  stats_exprs            -> aggregate Columns evaluated on the new state
-                            in ONE job (the only driver-side action per
-                            superstep besides materialization)
+  stats_exprs            -> aggregate Columns observed on the new state
   converged(stats)       -> bool, the masterCompute hook
+
+Every superstep is exactly ONE Spark job: the stats ride the action that
+materializes the new state (`observe` on the localCheckpoint or on the
+snapshot write), so convergence is checked after every superstep at no
+extra job.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from graph_data_science_spark.streaming.checkpoint import CheckpointManager
 
@@ -53,14 +56,14 @@ class PregelEngine:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_interval: int = 5,
-        use_local_checkpoint: bool = True,
     ):
         """checkpoint_dir=None disables durable snapshots (pure in-memory,
-        like the reference). checkpoint_interval=k writes a durable
-        snapshot every k supersteps plus the final one."""
+        like the reference). checkpoint_interval governs durable snapshots
+        only: with a checkpoint_dir, every k-th superstep of a run and the
+        final one are written as snapshots. Every superstep's lineage is
+        cut either way."""
         self.spark = spark
         self.checkpoint_interval = checkpoint_interval
-        self.use_local_checkpoint = use_local_checkpoint
         self.manager = CheckpointManager(checkpoint_dir, spark) if checkpoint_dir else None
 
     def run(
@@ -71,8 +74,6 @@ class PregelEngine:
         converged: Callable[[dict[str, Any]], bool],
         max_iterations: int,
         resume: bool = False,
-        on_superstep: Callable[[int, dict[str, Any]], None] | None = None,
-        stats_interval: int = 1,
     ) -> PregelResult:
         """Drive supersteps until convergence or max_iterations.
 
@@ -84,13 +85,13 @@ class PregelEngine:
         max_iterations. converged(stats) is evaluated after each superstep
         (the masterCompute position).
 
-        stats_interval > 1 chains that many supersteps lazily into ONE
-        Spark job before materializing + checking convergence — the
-        per-superstep driver/job overhead amortizes away (vital for tiny
-        graphs and cheap supersteps). Convergence is then detected at the
-        next checked superstep; ran_iterations becomes an upper bound
-        within the interval. Use the default (1) when exact
-        iteration-count parity with the reference matters.
+        Each superstep runs one job: `step(...).observe(stats)` is either
+        localCheckpointed (eager) or, on snapshot supersteps, written by
+        the CheckpointManager; the observation fills from that one action.
+        A run that converges between snapshots writes one final snapshot
+        from the checkpointed state. Each superstep appends one metrics
+        record (stats + superstep + wall_sec); with a checkpoint_dir the
+        record also goes to metrics.jsonl and, on snapshots, _lineage.json.
         """
         start_superstep = 0
         state = initial_state
@@ -120,60 +121,48 @@ class PregelEngine:
         old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
         conf.set("spark.sql.adaptive.enabled", "false")
 
-        live: list[DataFrame] = []  # persisted ancestors still in lineage
+        local_cut: DataFrame | None = None  # this run's previous localCheckpoint
         did_converge = False
         ran = start_superstep
         t0 = time.time()
         try:
             for s in range(start_superstep, max_iterations):
-                new_state = step(state, s)
-                if stats_interval > 1 and (s + 1) % stats_interval != 0 and s != max_iterations - 1:
-                    # Stay lazy (no job), but cut the LOGICAL plan at the RDD
-                    # boundary: step() references `state` more than once (state
-                    # ⋈ msgs(state)), so chaining raw plans grows the tree
-                    # exponentially (2^k subtree copies). A lazy localCheckpoint
-                    # plans this superstep now (small plan) and hands the next
-                    # superstep a LogicalRDD — RDD lineage is a shared DAG, so
-                    # growth is linear and one job materializes the whole chain.
-                    state = new_state.localCheckpoint(eager=False)
-                    continue
-                new_state = new_state.persist()
-                # ONE action per superstep: the stats aggregate both
-                # materializes the persisted state and feeds masterCompute
-                stats = new_state.agg(*stats_exprs).collect()[0].asDict()
-                stats["superstep"] = s
-                stats["wall_sec"] = time.time() - t0
+                obs = Observation()
+                new_state = step(state, s).observe(obs, *stats_exprs)
+                stats: dict[str, Any] = {}
+
+                def observed() -> dict[str, Any]:
+                    # called once the superstep's job has filled `obs`
+                    stats.update(_plain(obs.get), superstep=s, wall_sec=time.time() - t0)
+                    return {"stats": stats}
+
+                snapshot = self.manager is not None and (
+                    s == max_iterations - 1
+                    or (s - start_superstep + 1) % self.checkpoint_interval == 0
+                )
+                if snapshot:
+                    stats["checkpointed"] = True
+                    new_state = self.manager.save(new_state, s, extra=observed)
+                else:
+                    new_state = new_state.localCheckpoint(eager=True)
+                    observed()
                 t0 = time.time()
                 is_converged = converged(stats)
                 # reference counting: converging superstep not counted
                 ran = s if is_converged else s + 1
-                is_last = is_converged or s == max_iterations - 1
 
-                # lineage truncation every checkpoint_interval supersteps (and
-                # at the end): durable parquet snapshot when a checkpoint dir
-                # is configured, localCheckpoint otherwise. In between, plan
-                # depth is bounded by the interval (persisted ancestors are
-                # scanned from cache, one-superstep recompute worst case).
-                truncate = is_last or ((s - start_superstep + 1) % self.checkpoint_interval == 0)
-                if truncate:
-                    pre_truncate = new_state
-                    if self.manager is not None:
-                        new_state = self.manager.save(new_state, s, extra={"stats": _plain(stats)})
-                        stats["checkpointed"] = True
-                    elif self.use_local_checkpoint:
-                        new_state = new_state.localCheckpoint(eager=True)
-                    if new_state is not pre_truncate:
-                        live.append(pre_truncate)
-                    for df in live:
-                        df.unpersist()
-                    live = []
+                if local_cut is not None:
+                    _release(local_cut)  # its successor is materialized
+                local_cut = None if snapshot else new_state
+                if is_converged and self.manager is not None and not snapshot:
+                    # converged between snapshots: persist the final state too
+                    stats["checkpointed"] = True
+                    new_state = self.manager.save(new_state, s, extra={"stats": stats})
+                    _release(local_cut)
                 if self.manager is not None:
-                    self.manager.log_metrics(_plain(stats))
+                    self.manager.log_metrics(stats)
                 metrics.append(stats)
-                if on_superstep:
-                    on_superstep(s, stats)
 
-                live.append(new_state)
                 state = new_state
                 if is_converged:
                     did_converge = True
@@ -183,6 +172,14 @@ class PregelEngine:
             conf.set("spark.sql.adaptive.enabled", old_aqe)
 
         return PregelResult(state=state, ran_iterations=ran, did_converge=did_converge, metrics=metrics)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the cached blocks behind a localCheckpointed DataFrame.
+    SparkContext.unpersistRDD, not RDD.unpersist: the latter logs a
+    warning per call for every locally checkpointed RDD."""
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def _plain(d: dict[str, Any]) -> dict[str, Any]:

@@ -96,7 +96,7 @@ def minimum_spanning_forest(
             F.col("cs").alias("src"), F.col("cd").alias("dst"), F.lit(1.0).alias("weight")
         )
         cg = Graph.from_edges(comp_edges)
-        mapping = _wcc(cg, stats_interval=4).components.select(
+        mapping = _wcc(cg).components.select(
             F.col("vid").alias("component"), F.col("component").alias("new_c")
         )
         comp = cut_lineage(
@@ -136,7 +136,7 @@ def spanning_tree(
         nodes=members,
         orientation=Orientation.UNDIRECTED,
     )
-    state, _ran, _conv, _m = _parent_fixpoint(tg, start_node, 10_000, None, 8)
+    state, _ran, _conv, _m = _parent_fixpoint(tg, start_node, 10_000, None)
     # attach the tree edge weight to each (vid, parent)
     ew = tree_edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"), "weight"
@@ -181,4 +181,4 @@ def k_spanning_tree(
         nodes=members,
         orientation=Orientation.UNDIRECTED,
     )
-    return _wcc(g, stats_interval=4).components.select("vid", "component")
+    return _wcc(g).components.select("vid", "component")

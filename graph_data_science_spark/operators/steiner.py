@@ -57,7 +57,6 @@ def steiner_tree(
     terminals: Iterable[int],
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
-    stats_interval: int = 5,
 ) -> SteinerTreeResult:
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -113,7 +112,7 @@ def steiner_tree(
     terminals_reached = 0
     # parent-chain length to ANY settled node is bounded by the TOTAL
     # relaxation supersteps across every continuation so far, not just the
-    # last one: a later continuation can converge in ~stats_interval rounds
+    # last one: a later continuation can converge in a few rounds
     # while an earlier-settled branch's chain is much longer. Bounding the
     # backward walk by only the last run's count left `active` undrained
     # and crashed on multi-terminal inputs with uneven branch depths.
@@ -130,7 +129,6 @@ def steiner_tree(
             stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
             converged=lambda st: (st["changed_count"] or 0) == 0,
             max_iterations=max_iterations,
-            stats_interval=stats_interval,
         )
         metrics.extend(result.metrics)
         state = result.state

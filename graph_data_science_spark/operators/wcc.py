@@ -53,7 +53,6 @@ def wcc(
     max_iterations: int = 100,
     engine: PregelEngine | None = None,
     resume: bool = False,
-    stats_interval: int = 1,
     star_contraction: bool = False,
 ) -> WccResult:
     """star_contraction=True adds the pointer-jumping shortcut
@@ -129,7 +128,6 @@ def wcc(
         converged=lambda st: (st["changed_count"] or 0) == 0,
         max_iterations=max_iterations,
         resume=resume,
-        stats_interval=stats_interval,
     )
     comps = result.state.select("vid", F.col("comp").alias("component"))
 

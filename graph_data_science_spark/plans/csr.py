@@ -193,7 +193,6 @@ def csr_page_rank(
     mode: str = "pagerank",
     engine: PregelEngine | None = None,
     resume: bool = False,
-    stats_interval: int = 1,
     csr: CsrGraph | None = None,
     num_blocks: int | None = None,
 ):
@@ -264,7 +263,6 @@ def csr_page_rank(
         converged=lambda st: st["sent"] == 0 and st["active"] == 0,
         max_iterations=max_iterations,
         resume=resume,
-        stats_interval=stats_interval,
     )
     scores = apply_scaler(result.state.select("vid", F.col("rank").alias("score")), "score", scaler)
     if own_csr:

@@ -45,16 +45,9 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     """Eagerly materialize df and return a stats-reset, plan-truncated
     DataFrame backed by the checkpointed RDD (no recomputation),
     preserving hash-partitioning/ordering when capturable."""
-    import os
-
     spark = df.sparkSession
     ck = df.localCheckpoint(eager=True)
     jvm = spark.sparkContext._jvm
-    if os.environ.get("CUT_LINEAGE_LEGACY") == "1":  # A/B experiment switch
-        jdf = spark._jsparkSession.internalCreateDataFrame(
-            ck._jdf.queryExecution().toRdd(), df._jdf.schema(), False
-        )
-        return DataFrame(jdf, spark)
     try:
         jlrdd = ck._jdf.queryExecution().analyzed()
         none = jvm.scala.Option.empty()

@@ -30,7 +30,7 @@ import json
 import os
 import shutil
 import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,9 +46,16 @@ class CheckpointManager:
     def _step_dir(self, superstep: int) -> str:
         return os.path.join(self.dir, f"superstep={superstep}")
 
-    def save(self, state: DataFrame, superstep: int, extra: dict[str, Any] | None = None) -> DataFrame:
+    def save(
+        self,
+        state: DataFrame,
+        superstep: int,
+        extra: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
+    ) -> DataFrame:
         """Write a durable snapshot; return the re-read DataFrame
-        (lineage truncated to a parquet scan)."""
+        (lineage truncated to a parquet scan). `extra` is merged into the
+        manifest; a callable is called after the data write, so it can
+        read an Observation on `state` that the write filled."""
         path = self._step_dir(superstep)
         tmp = path + ".tmp"
         if os.path.exists(tmp):
@@ -64,6 +71,8 @@ class CheckpointManager:
             "files": files,
             "written_at": time.time(),
         }
+        if callable(extra):
+            extra = extra()
         if extra:
             lineage.update(extra)
         with open(os.path.join(tmp, "_lineage.json"), "w") as fh:
@@ -71,7 +80,8 @@ class CheckpointManager:
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)  # manifest written last -> rename is the commit point
-        return self.spark.read.parquet(path)
+        # the known schema spares the footer-inference job
+        return self.spark.read.schema(state.schema).parquet(path)
 
     def log_metrics(self, record: dict[str, Any]) -> None:
         with open(self._metrics_path, "a") as fh:

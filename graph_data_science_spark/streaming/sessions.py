@@ -16,8 +16,9 @@ emits one SNAPSHOT row per session it touched; a session that a gap
 closed inside the batch emits its final snapshot with open=false. The
 sink is an append-only log of snapshots (parquet FileSink supports
 only append): the current table is latest-snapshot-per-(user_id,
-session_idx) — max n_events wins, the same latest-wins compaction
-contract as streaming/docs.py's near-dup sink.
+session_idx) — max n_events wins (closed over open on a tie), the
+same latest-wins compaction contract as streaming/docs.py's near-dup
+sink.
 
 Ordering contract: events WITHIN a micro-batch are sorted here
 (us, event_id); BATCHES must arrive in event-time order per user (a
@@ -138,9 +139,13 @@ def start_session_pipeline(
 
 def current_sessions(snapshot_log: DataFrame) -> DataFrame:
     """Latest snapshot per (user_id, session_idx) from the append-only
-    sink — the compaction read, two-phase (per-key max, then semi-join
-    back), no global window."""
+    sink — the compaction read, two-phase (per-key max, then join back),
+    no global window. A gap that closes a session in a later batch emits
+    a closed snapshot with the same n_events as the open one before it;
+    the closed snapshot wins that tie."""
     latest = snapshot_log.groupBy("user_id", "session_idx").agg(
-        F.max("n_events").alias("n_events")
-    )
-    return snapshot_log.join(latest, ["user_id", "session_idx", "n_events"])
+        F.max(F.struct("n_events", (~F.col("open")).alias("closed"))).alias("k")
+    ).select("user_id", "session_idx", "k.n_events", (~F.col("k.closed")).alias("open"))
+    return snapshot_log.join(
+        latest, ["user_id", "session_idx", "n_events", "open"]
+    ).select(*snapshot_log.columns)

@@ -28,7 +28,7 @@ def test_csr_blocks_cover_all_edges(spark):
 
 def test_csr_pagerank_matches_reference_fixture(spark):
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=0, max_iterations=41, backend="csr", stats_interval=10)
+    res = page_rank(g, tolerance=0, max_iterations=41, backend="csr")
     got = {r["vid"]: r["score"] for r in res.scores.collect()}
     for name, expected in PR_EXPECTED.items():
         assert got[vid(name)] == pytest.approx(expected, abs=1e-5), name
@@ -37,10 +37,9 @@ def test_csr_pagerank_matches_reference_fixture(spark):
 def test_csr_matches_sql_backend(spark):
     g = pagerank_graph(spark)
     sql_scores = {r["vid"]: r["score"] for r in
-                  page_rank(g, tolerance=1e-8, max_iterations=60, stats_interval=10).scores.collect()}
+                  page_rank(g, tolerance=1e-8, max_iterations=60).scores.collect()}
     csr_scores = {r["vid"]: r["score"] for r in
-                  page_rank(g, tolerance=1e-8, max_iterations=60, backend="csr",
-                            stats_interval=10).scores.collect()}
+                  page_rank(g, tolerance=1e-8, max_iterations=60, backend="csr").scores.collect()}
     for v in sql_scores:
         assert csr_scores[v] == pytest.approx(sql_scores[v], abs=1e-9)
 

@@ -96,7 +96,7 @@ def test_deep_chain_pointer_doubling(spark):
         [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(edges)
-    res = dijkstra(g, source=0, targets=[n - 1], max_iterations=80, stats_interval=10)
+    res = dijkstra(g, source=0, targets=[n - 1], max_iterations=80)
     assert res.did_converge
     rows = res.paths.collect()
     assert len(rows) == 1

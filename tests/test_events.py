@@ -45,9 +45,11 @@ def events(spark):
 
 
 def test_sessionize_gap_splits(spark, events):
+    sessions = sessionize(events, gap_minutes=30)
+    assert sessions.columns == events.columns + ["session_idx"]
     got = {
         (r["user_id"], r["event_id"]): r["session_idx"]
-        for r in sessionize(events, gap_minutes=30).collect()
+        for r in sessions.collect()
     }
     assert got[(1, 0)] == got[(1, 1)] == got[(1, 2)] == 1
     assert got[(1, 3)] == got[(1, 4)] == 2

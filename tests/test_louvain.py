@@ -16,6 +16,7 @@ checked here is therefore:
 import pytest
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators import louvain as louvain_mod
 from graph_data_science_spark.operators.louvain import louvain
 from graph_data_science_spark.operators.modularity import total_modularity
 from graph_data_science_spark.plans.graph import Graph, Orientation
@@ -140,3 +141,22 @@ def test_louvain_modularity_on_random(spark):
     n_comms = res.communities.select("community").distinct().count()
     assert 1 < n_comms < 300
     assert res.communities.count() == 300
+
+
+def test_louvain_restores_conf_when_a_level_raises(spark, monkeypatch):
+    def boom(*args, **kwargs):
+        raise RuntimeError("level failed")
+
+    monkeypatch.setattr(louvain_mod, "_local_move", boom)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1234567")
+    try:
+        with pytest.raises(RuntimeError, match="level failed"):
+            louvain(_graph(spark, weighted=False))
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1234567"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -25,7 +25,7 @@ def scores_dict(result):
 
 def test_without_tolerance(spark):
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=0, max_iterations=41, stats_interval=10)
+    res = page_rank(g, tolerance=0, max_iterations=41)
     got = scores_dict(res)
     for name, expected in PR_EXPECTED.items():
         assert got[vid(name)] == pytest.approx(expected, abs=SCORE_PRECISION), name
@@ -47,8 +47,7 @@ def test_with_tolerance_iteration_count(spark, tolerance, expected_iterations):
 def test_personalized(spark, sources, expected):
     # PageRankTest.java:139-166
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=0, max_iterations=41, source_nodes=[vid(s) for s in sources],
-                    stats_interval=10)
+    res = page_rank(g, tolerance=0, max_iterations=41, source_nodes=[vid(s) for s in sources])
     got = scores_dict(res)
     for name, exp in expected.items():
         assert got[vid(name)] == pytest.approx(exp, abs=SCORE_PRECISION), name
@@ -72,7 +71,7 @@ def numpy_pagerank_oracle(n, edges, d=0.85, iters=200):
 def test_vs_numpy_oracle_1e6(spark):
     """north rule: per-vertex scores allclose at 1e-6 vs oracle."""
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=1e-9, max_iterations=200, stats_interval=10)
+    res = page_rank(g, tolerance=1e-9, max_iterations=200)
     got = scores_dict(res)
     edges = [(vid(s), vid(t)) for s, t in PR_EDGES]
     oracle = numpy_pagerank_oracle(11, edges)
@@ -84,7 +83,7 @@ def test_dangling_node_score_is_alpha(spark):
     # isolated / in-degree-0 node score = 1 - d = 0.15 (no redistribution,
     # PageRankComputation.java:91-98, PageRankTest.java:78-82)
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=0, max_iterations=41, stats_interval=10)
+    res = page_rank(g, tolerance=0, max_iterations=41)
     got = scores_dict(res)
     for name in "ghijk":
         assert got[vid(name)] == pytest.approx(0.15, abs=1e-12)
@@ -92,7 +91,7 @@ def test_dangling_node_score_is_alpha(spark):
 
 def test_weighted_uniform_weights_match_unweighted(spark):
     g = pagerank_graph(spark)
-    res_w = page_rank(g, tolerance=0, max_iterations=41, weighted=True, stats_interval=10)
+    res_w = page_rank(g, tolerance=0, max_iterations=41, weighted=True)
     got = scores_dict(res_w)
     for name, expected in PR_EXPECTED.items():
         assert got[vid(name)] == pytest.approx(expected, abs=SCORE_PRECISION)
@@ -107,7 +106,7 @@ def test_normalized_mode_sums_to_one(spark):
 
 def test_scaler_l1norm(spark):
     g = pagerank_graph(spark)
-    res = page_rank(g, tolerance=0, max_iterations=41, scaler="l1norm", stats_interval=10)
+    res = page_rank(g, tolerance=0, max_iterations=41, scaler="l1norm")
     got = scores_dict(res)
     assert sum(abs(v) for v in got.values()) == pytest.approx(1.0, abs=1e-9)
 

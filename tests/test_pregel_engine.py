@@ -12,8 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.pagerank import page_rank
+from graph_data_science_spark.operators.paths import bfs
 from graph_data_science_spark.operators.pregel import PregelEngine
 from graph_data_science_spark.operators.wcc import wcc
+from graph_data_science_spark.plans.graph import Graph
 from tests.fixtures import pagerank_graph, wcc_chain_graph
 
 
@@ -65,3 +67,67 @@ def test_durable_snapshot_is_atomic(spark, tmp_ckpt):
     with open(os.path.join(bogus, "part-00000.parquet"), "w") as fh:
         fh.write("garbage")
     assert eng.manager.latest_superstep() == latest
+
+
+def _cached_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_in_memory_superstep_is_one_job(spark):
+    sc = spark.sparkContext
+    state0 = spark.range(100).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
+    k = 6
+    cached_before = _cached_rdds(spark)
+    sc.setJobGroup("pregel-one-job", "PregelEngine job count")
+    try:
+        res = PregelEngine(spark).run(
+            initial_state=state0,
+            step=lambda st, s: st.select("vid", (F.col("x") + 1).alias("x")),
+            stats_exprs=[F.max("x").alias("max_x"), F.count(F.lit(1)).alias("n")],
+            converged=lambda st: False,
+            max_iterations=k,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("pregel-one-job")) == k
+    assert [(m["superstep"], m["max_x"], m["n"]) for m in res.metrics] == [
+        (s, s + 1, 100) for s in range(k)
+    ]
+    assert all("wall_sec" in m for m in res.metrics)
+    # superseded local checkpoints are released; only the final state stays
+    assert _cached_rdds(spark) - cached_before <= 1
+    assert res.state.agg(F.max("x")).collect()[0][0] == k
+
+
+def test_ran_iterations_exact_between_intervals(spark):
+    # BFS down an 8-node chain: superstep s reaches node s + 1, superstep 7
+    # changes nothing, so the reference counts 7 iterations
+    n = 8
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, weight double"
+    )
+    res = bfs(Graph.from_edges(edges), [0])
+    assert res.did_converge
+    assert res.ran_iterations == n - 1
+    assert len(res.metrics) == n
+    assert [m["changed_count"] for m in res.metrics] == [1] * (n - 1) + [0]
+
+
+def test_snapshot_lineage_stats_match_metrics(spark, tmp_ckpt):
+    g = wcc_chain_graph(spark)
+    interval = 2
+    eng = PregelEngine(spark, checkpoint_dir=tmp_ckpt, checkpoint_interval=interval)
+    res = wcc(g, engine=eng)
+    assert res.did_converge
+
+    records = {m["superstep"]: m for m in eng.manager.metrics()}
+    assert sorted(records) == list(range(len(res.metrics)))
+    last = len(res.metrics) - 1
+    snapshots = sorted(
+        int(name.split("=", 1)[1]) for name in os.listdir(tmp_ckpt)
+        if name.startswith("superstep=")
+    )
+    assert snapshots == sorted({s for s in records if (s + 1) % interval == 0} | {last})
+    for s in snapshots:
+        assert eng.manager.lineage(s)["stats"] == records[s]
+        assert records[s]["checkpointed"] is True

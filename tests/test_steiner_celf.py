@@ -80,7 +80,7 @@ def test_steiner_uneven_branch_depths(spark):
     edges = [(0, 101, 1.0), (101, 102, 1.0), (102, 103, 1.0)]
     edges += [(0, 1, 1.0)] + [(i, i + 1, 1.0) for i in range(1, 20)]
     res = steiner_tree(
-        _graph(spark, edges), source=0, terminals=[103, 20], stats_interval=5
+        _graph(spark, edges), source=0, terminals=[103, 20]
     )
     assert res.terminals_reached == 2
     assert res.total_cost == 23.0

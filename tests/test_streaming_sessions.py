@@ -45,7 +45,11 @@ def _write_chunk(spark, path, rows):
         "append").parquet(path)
 
 
-def test_streaming_sessions_match_batch(spark, tmp_path):
+@pytest.fixture(scope="module")
+def snapshot_dir(spark, tmp_path_factory):
+    """Both chunks run through the pipeline with one shared checkpoint;
+    returns the snapshot log's directory."""
+    tmp_path = tmp_path_factory.mktemp("sessions")
     incoming = str(tmp_path / "incoming")
     out = str(tmp_path / "sessions_out")
     ckpt = str(tmp_path / "ckpt")
@@ -56,7 +60,11 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     _write_chunk(spark, incoming, CHUNK2)
     q = start_session_pipeline(spark, incoming, out, ckpt, gap_minutes=30)
     q.awaitTermination(120)
+    return out
 
+
+def test_streaming_sessions_match_batch(spark, snapshot_dir):
+    out = snapshot_dir
     got = {
         (r["user_id"], r["session_idx"]): r
         for r in current_sessions(spark.read.parquet(out)).collect()
@@ -86,3 +94,13 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     assert log.filter(
         (F.col("user_id") == 1) & (F.col("session_idx") == 1)
     ).count() == 2
+
+
+def test_current_sessions_one_row_per_session(spark, snapshot_dir):
+    rows = current_sessions(spark.read.parquet(snapshot_dir)).collect()
+    keys = [(r["user_id"], r["session_idx"]) for r in rows]
+    assert len(keys) == len(set(keys))
+    # user 2's session 1 was open after chunk 1 and closed by chunk 2's gap
+    # with the same n_events; the closed snapshot is the current one
+    (s21,) = [r for r in rows if (r["user_id"], r["session_idx"]) == (2, 1)]
+    assert s21["n_events"] == 1 and s21["open"] is False

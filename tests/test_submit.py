@@ -57,7 +57,7 @@ def test_spark_submit_pyfiles_pagerank(pyfiles_zip, tmp_path):
             "--py-files", pyfiles_zip,
             script,
             "--generate-nodes", "2000", "--algo", "pagerank",
-            "--tolerance", "1e-4", "--stats-interval", "10",
+            "--tolerance", "1e-4",
             "--output", outdir,
         ],
         cwd=str(tmp_path),  # NOT the repo: the zip must provide the package
@@ -85,7 +85,7 @@ def test_spark_submit_resume_flow(pyfiles_zip, tmp_path):
         "--conf", "spark.ui.enabled=false",
         "--py-files", pyfiles_zip, script,
         "--generate-nodes", "500", "--algo", "pagerank",
-        "--tolerance", "0", "--stats-interval", "4",
+        "--tolerance", "0",
     ]
     r1 = _run(common + ["--max-iterations", "4", "--checkpoint-dir", ckpt,
                         "--output", str(tmp_path / "p1")], cwd=str(tmp_path))

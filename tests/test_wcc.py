@@ -84,7 +84,7 @@ def test_star_contraction_chain_logarithmic(spark):
         [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(edges)
-    res = wcc(g, max_iterations=40, stats_interval=8, star_contraction=True)
+    res = wcc(g, max_iterations=40, star_contraction=True)
     assert res.did_converge, "star contraction should converge in O(log n)"
     assert res.ran_iterations <= 32
     comps = res.components.select("component").distinct().collect()
@@ -98,6 +98,6 @@ def test_star_contraction_same_components(spark):
         "src long, dst long, weight double",
     )
     g = Graph.from_edges(edges)
-    plain = wcc(g, max_iterations=60, stats_interval=8).components
-    short = wcc(g, max_iterations=60, stats_interval=8, star_contraction=True).components
+    plain = wcc(g, max_iterations=60).components
+    short = wcc(g, max_iterations=60, star_contraction=True).components
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, short.collect()))

@@ -183,9 +183,8 @@ def build_queries():
     return {
         "pagerank_10step": lambda c: page_rank(
             c["g"], damping_factor=0.85, tolerance=1e-12, max_iterations=10,
-            stats_interval=5,
         ).scores.count(),
-        "wcc": lambda c: wcc(c["g"], stats_interval=4).components.count(),
+        "wcc": lambda c: wcc(c["g"]).components.count(),
         "lpa_5sync": lambda c: label_propagation(
             c["g"], max_iterations=5
         ).labels.count(),
@@ -196,7 +195,7 @@ def build_queries():
             c["g"].nodes.select("vid", (F.col("vid") % 1000).alias("community")),
         ).count(),
         "sssp_paths": lambda c: dijkstra(
-            c["g"], source=0, max_iterations=60, stats_interval=5
+            c["g"], source=0, max_iterations=60
         ).paths.count(),
         "betweenness_16src": lambda c: betweenness(
             c["g"], sampling_size=16, batch_size=16

@@ -38,7 +38,7 @@ t0 = time.time()
 # fixed work (20 supersteps, no early exit): scaling efficiency compares
 # identical computation at two parallelism levels; supersteps-to-
 # convergence is measured by bench.py separately
-res = page_rank(g, tolerance=0, max_iterations=20, backend=backend, stats_interval=5)
+res = page_rank(g, tolerance=0, max_iterations=20, backend=backend)
 res.scores.count()
 wall = time.time() - t0
 supersteps = 20

@@ -4,10 +4,10 @@ level. Usage: python tools/scale_child.py <spec> <backend> <nodes> [supersteps]
   separate executor JVMs — the faithful stand-in for N vs 4N executors).
 Prints one RESULT json line with total AND steady-state throughput.
 
-Steady-state = supersteps after the first stats window (the first window
+Steady-state = supersteps after the first one (the first superstep
 pays one-time costs: edge repartition+cache build, JIT warmup, first
-shuffle-file creation). The per-window walls come from PregelEngine's own
-metrics (superstep checkpoint/convergence metrics, north-rule item), so
+shuffle-file creation). The per-superstep walls come from PregelEngine's
+own metrics (superstep checkpoint/convergence metrics, north-rule item), so
 the measurement is the engine's own bookkeeping, not an external timer.
 """
 
@@ -21,8 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from graph_data_science_spark.operators.pagerank import page_rank
 from graph_data_science_spark.sources.generator import random_graph
 from graph_data_science_spark.session import get_spark
-
-STATS_INTERVAL = int(os.environ.get("STATS_INTERVAL", "5"))
 
 
 def build_spark(spec: str):
@@ -79,14 +77,13 @@ def main():
     g.nodes.persist()
     g.nodes.count()
     t0 = time.time()
-    res = page_rank(g, tolerance=0, max_iterations=supersteps, backend=backend,
-                    stats_interval=STATS_INTERVAL)
+    res = page_rank(g, tolerance=0, max_iterations=supersteps, backend=backend)
     res.scores.count()
     wall = time.time() - t0
-    # steady state: drop the first stats window (cache build + JIT)
+    # steady state: drop the first superstep (cache build + JIT)
     walls = [m_["wall_sec"] for m_ in res.metrics]
     steady_wall = sum(walls[1:]) if len(walls) > 1 else wall
-    steady_ss = supersteps - STATS_INTERVAL if len(walls) > 1 else supersteps
+    steady_ss = supersteps - 1 if len(walls) > 1 else supersteps
     print("RESULT " + json.dumps({
         "tag": os.environ.get("TAG", ""),
         "cores": cores, "spec": spec, "backend": backend,

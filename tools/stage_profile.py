@@ -212,10 +212,7 @@ def main():
     g.nodes.persist()
     g.nodes.count()
     t0 = time.time() * 1000
-    res = page_rank(
-        g, tolerance=0, max_iterations=supersteps, backend=backend,
-        stats_interval=int(os.environ.get("STATS_INTERVAL", "5")),
-    )
+    res = page_rank(g, tolerance=0, max_iterations=supersteps, backend=backend)
     res.scores.count()
     t1 = time.time() * 1000
     spark.stop()

@@ -39,7 +39,6 @@ def main() -> int:
     p.add_argument("--damping", type=float, default=0.85)
     p.add_argument("--tolerance", type=float, default=1e-6)
     p.add_argument("--max-iterations", type=int, default=100)
-    p.add_argument("--stats-interval", type=int, default=5)
     args = p.parse_args()
 
     # The SparkSession comes from spark-submit's conf (master, executors,
@@ -77,7 +76,7 @@ def main() -> int:
         r = page_rank(
             graph, damping_factor=args.damping, tolerance=args.tolerance,
             max_iterations=args.max_iterations, engine=engine,
-            resume=args.resume, stats_interval=args.stats_interval,
+            resume=args.resume,
         )
         meta.update({"ranIterations": r.ran_iterations,
                      "didConverge": r.did_converge})
