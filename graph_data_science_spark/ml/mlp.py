@@ -109,6 +109,9 @@ def fit_mlp_classifier(
     dims = [d, *[int(h) for h in hidden_layer_sizes], num_classes]
     ws = _init_weights(dims, rng)
     shapes = [(w.shape, b.shape) for w, b in ws]
+    # L2 penalizes weights only, never biases (MLPClassifier's
+    # penaltyForBatch sums the squared weight matrices)
+    l2_mask = _pack([(np.ones_like(w), np.zeros_like(b)) for w, b in ws])
     mom = np.zeros(sum(w.size + b.size for w, b in ws))
     vel = np.zeros_like(mom)
     b1, b2, eps = 0.9, 0.999, 1e-8
@@ -142,8 +145,9 @@ def fit_mlp_classifier(
             g += np.asarray(r["g"])
             loss += r["loss"]
             m += int(r["m"])
-        g = g / m + l2_penalty * flat_w
-        loss = loss / m + 0.5 * l2_penalty * float(flat_w @ flat_w)
+        penalized = l2_mask * flat_w
+        g = g / m + l2_penalty * penalized
+        loss = loss / m + 0.5 * l2_penalty * float(penalized @ penalized)
         losses.append(loss)
         mom = b1 * mom + (1 - b1) * g
         vel = b2 * vel + (1 - b2) * g * g

@@ -23,19 +23,29 @@ Reference semantics (algo/src/main/java/org/neo4j/gds/pagerank/):
     (PartitionedComputer.java:87-93); a message reactivates a halted
     node (pregel/.../ComputeStep.java:71-75).
 
-Spark plan per superstep (backend="sql", pure JVM / whole-stage codegen):
+One state machine, two message kernels. `page_rank` owns everything but
+the message step: state0, the ArticleRank denominator, personalization,
+the `normalized` dangling-mass term, the update, the stats, convergence,
+the scaler and the result. `backend` picks only the function that turns
+senders(vid, contrib) into msgs(vid, msg_sum), and the cached input it
+reads:
+  backend="sql" (pure JVM / whole-stage codegen): `sql_messages` over
+    the edge table `edges_by_source` hash-partitions once.
+  backend="csr": `plans/csr.py:csr_messages` over `build_csr_blocks`,
+    a cogrouped numpy SpMV per CSR block — the north-rule hot path.
+
+Spark plan per superstep (backend="sql"):
   senders = state.filter(will_send)            # vote-bits as a filter
   msgs    = senders ⋈ edges ON vid = src       # the gather/scatter join
-            .groupBy(dst).sum(delta/deg * w)   # combiner = partial agg
+            .repartition(dst)                  # raw (dst, m) shuffle
+            .groupBy(dst).sum(delta/deg * w)
   state'  = state left-join msgs, update (rank, delta, halted, will_send)
-backend="csr" routes the same superstep through per-partition CSR blocks
-with a vectorized numpy SpMV (see plans/csr.py) — the north-rule hot path.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
@@ -52,6 +62,45 @@ class CentralityResult:
     ran_iterations: int
     did_converge: bool
     metrics: list[dict[str, Any]] = field(default_factory=list)
+
+
+def edges_by_source(graph: Graph) -> DataFrame:
+    """The sql backend's cached input: (e_src, e_dst, weight), hash-
+    partitioned + sorted on e_src. The cached InMemoryRelation preserves
+    outputPartitioning/outputOrdering, so every superstep's senders ⋈
+    edges reuses it — only the (small) sender side shuffles. At 10^9+
+    edges this is the difference between shuffling the edge table per
+    superstep and never shuffling it again. The caller unpersists it."""
+    n_part = int(graph.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight")
+        .repartition(n_part, "e_src")
+        .sortWithinPartitions("e_src")
+        .persist()
+    )
+
+
+def sql_messages(edges: DataFrame, senders: DataFrame, weighted: bool) -> DataFrame:
+    """senders(vid, contrib) -> msgs(vid, msg_sum) over `edges_by_source`.
+
+    Map-side partial aggregation ("combiner") is a LOSS for this shuffle
+    shape: each map partition sees ~all destination vids, so the partial
+    hash table has ~|V| entries per task — cache-hostile and barely
+    deduplicating (measured: aggregate task CPU inflates 2.6x from 8->32
+    local cores). Shuffling the raw (dst, m) pairs instead moves a bit
+    more data but both partial+final aggs then run post-exchange over
+    |V|/P keys per task (cache-resident).
+    """
+    n_part = int(senders.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    w = F.col("weight") if weighted else F.lit(1.0)
+    return (
+        senders.select(F.col("vid").alias("e_src"), "contrib")
+        .join(edges, "e_src")
+        .select(F.col("e_dst").alias("vid"), (F.col("contrib") * w).alias("m"))
+        .repartition(n_part, "vid")
+        .groupBy("vid")
+        .agg(F.sum("m").alias("msg_sum"))
+    )
 
 
 def page_rank(
@@ -71,22 +120,6 @@ def page_rank(
     spark = graph.edges.sparkSession
     alpha = 1.0 - damping_factor
     sources = sorted(set(source_nodes)) if source_nodes else None
-
-    if backend == "csr":
-        from graph_data_science_spark.plans.csr import csr_page_rank
-
-        return csr_page_rank(
-            graph,
-            damping_factor=damping_factor,
-            tolerance=tolerance,
-            max_iterations=max_iterations,
-            source_nodes=sources,
-            weighted=weighted,
-            scaler=scaler,
-            mode=mode,
-            engine=engine,
-            resume=resume,
-        )
 
     deg = graph.degrees(weighted=weighted, direction="out")
     if mode == "articlerank":
@@ -114,7 +147,6 @@ def page_rank(
         ((F.col("degree") > 0) & (init_rank > 0)).alias("will_send"),
     )
 
-    edges = graph.edges
     dangling_ids = None
     n_nodes = None
     if normalized:
@@ -122,41 +154,20 @@ def page_rank(
         dangling_ids.persist()
         n_nodes = graph.nodes.count()
 
-    msg_val = (F.col("contrib")) * (F.col("weight") if weighted else F.lit(1.0))
-    # Pre-shuffle the edge table ONCE: hash-partitioned + sorted on the
-    # join key, then cached. The cached InMemoryRelation preserves
-    # outputPartitioning/outputOrdering, so every superstep's
-    # senders ⋈ edges reuses it — only the (small) sender side shuffles.
-    # At 10^9+ edges this is the difference between shuffling the edge
-    # table per superstep and never shuffling it again.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges_renamed = (
-        edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight")
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
-    )
+    if backend == "csr":
+        # imported here so the sql backend never loads pandas
+        from graph_data_science_spark.plans.csr import build_csr_blocks, csr_messages
 
-    # Map-side partial aggregation ("combiner") is a LOSS for this shuffle
-    # shape: each map partition sees ~all destination vids, so the partial
-    # hash table has ~|V| entries per task — cache-hostile and barely
-    # deduplicating (measured: aggregate task CPU inflates 2.6x from 8->32
-    # local cores). Shuffling the raw (dst, m) pairs instead moves a bit
-    # more data but both partial+final aggs then run post-exchange over
-    # |V|/P keys per task (cache-resident). Opt out with PR_MSG_COMBINE=1
-    # for graphs whose in-degree skew makes the combiner win (hub-heavy).
-    msg_combine = os.environ.get("PR_MSG_COMBINE", "0") == "1"
+        msg_input = build_csr_blocks(graph)
+        messages = partial(csr_messages, msg_input, weighted=weighted)
+    else:
+        msg_input = edges_by_source(graph)
+        messages = partial(sql_messages, msg_input, weighted=weighted)
 
     def step(state: DataFrame, s: int) -> DataFrame:
-        senders = state.filter(F.col("will_send")).select(
-            F.col("vid").alias("e_src"), (F.col("delta") / denom).alias("contrib")
+        msgs = messages(
+            state.filter(F.col("will_send")).select("vid", (F.col("delta") / denom).alias("contrib"))
         )
-        msgs_raw = senders.join(edges_renamed, "e_src").select(
-            F.col("e_dst").alias("vid"), msg_val.alias("m")
-        )
-        if not msg_combine:
-            msgs_raw = msgs_raw.repartition(n_part, "vid")
-        msgs = msgs_raw.groupBy("vid").agg(F.sum("m").alias("msg_sum"))
         if normalized:
             # optional mode: redistribute dangling mass uniformly
             dangling_mass = (
@@ -204,7 +215,7 @@ def page_rank(
     )
     if dangling_ids is not None:
         dangling_ids.unpersist()
-    edges_renamed.unpersist()
+    msg_input.unpersist()
 
     scores = result.state.select("vid", F.col("rank").alias("score"))
     if normalized:

@@ -1,4 +1,11 @@
-"""Per-partition CSR blocks + vectorized gather-scatter (SpMV) hot loop.
+"""Per-partition CSR blocks + vectorized gather-scatter (SpMV) messages.
+
+This module supplies only the message kernel of `page_rank(...,
+backend="csr")`: `build_csr_blocks` is the cached input and
+`csr_messages` turns senders(vid, contrib) into msgs(vid, msg_sum).
+The PageRank state machine itself (init, update, vote bits, stats,
+convergence, normalization, scaler) lives once, in
+operators/pagerank.py, and is shared with the sql backend.
 
 This is the north-rule architecture for the PageRank superstep at
 10^9..10^12-edge scale:
@@ -43,8 +50,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
-from graph_data_science_spark.operators.scaling import apply_scaler
 from graph_data_science_spark.plans.graph import Graph
 
 _BLOCK_SCHEMA = (
@@ -180,96 +185,3 @@ def csr_messages(csr: CsrGraph, active: DataFrame, weighted: bool) -> DataFrame:
     cog = csr.blocks.groupBy("block").cogroup(routed.groupBy("block"))
     partials = cog.applyInPandas(_make_scatter(weighted), schema="vid long, m double")
     return partials.groupBy("vid").agg(F.sum("m").alias("msg_sum"))
-
-
-def csr_page_rank(
-    graph: Graph,
-    damping_factor: float = 0.85,
-    tolerance: float = 1e-7,
-    max_iterations: int = 20,
-    source_nodes=None,
-    weighted: bool = False,
-    scaler: str | None = None,
-    mode: str = "pagerank",
-    engine: PregelEngine | None = None,
-    resume: bool = False,
-    csr: CsrGraph | None = None,
-    num_blocks: int | None = None,
-):
-    """PageRank with the CSR gather-scatter backend. Semantics identical
-    to operators/pagerank.py (same state machine, same convergence); only
-    the message-production path differs."""
-    from graph_data_science_spark.operators.pagerank import CentralityResult
-
-    spark = graph.edges.sparkSession
-    alpha = 1.0 - damping_factor
-    own_csr = csr is None
-    if csr is None:
-        csr = build_csr_blocks(graph, num_blocks=num_blocks)
-
-    deg = graph.degrees(weighted=weighted, direction="out")
-    if mode == "articlerank":
-        avg_degree = deg.agg(F.avg("degree")).collect()[0][0] or 0.0
-        denom = F.col("deg") + F.lit(avg_degree)
-    else:
-        denom = F.col("deg")
-
-    if source_nodes:
-        init_rank = F.when(F.col("vid").isin(list(source_nodes)), F.lit(alpha)).otherwise(F.lit(0.0))
-    else:
-        init_rank = F.lit(alpha)
-
-    state0 = deg.select(
-        "vid",
-        F.col("degree").alias("deg"),
-        init_rank.alias("rank"),
-        init_rank.alias("delta"),
-        F.lit(False).alias("halted"),
-        ((F.col("degree") > 0) & (init_rank > 0)).alias("will_send"),
-    )
-
-    def step(state: DataFrame, s: int) -> DataFrame:
-        if s == 0:
-            return state
-        active = state.filter(F.col("will_send")).select(
-            "vid", (F.col("delta") / denom).alias("contrib")
-        )
-        msgs = csr_messages(csr, active, weighted)
-        joined = state.join(msgs, "vid", "left")
-        computes = F.col("msg_sum").isNotNull() | ~F.col("halted")
-        new_delta = F.when(
-            computes, damping_factor * F.coalesce(F.col("msg_sum"), F.lit(0.0))
-        ).otherwise(F.col("delta"))
-        return joined.select(
-            "vid",
-            "deg",
-            F.when(computes, F.col("rank") + new_delta).otherwise(F.col("rank")).alias("rank"),
-            new_delta.alias("delta"),
-            F.when(computes, ~(new_delta > tolerance)).otherwise(F.col("halted")).alias("halted"),
-            (computes & (new_delta > tolerance) & (F.col("deg") > 0)).alias("will_send"),
-        )
-
-    eng = engine or PregelEngine(spark)
-    stats_exprs = [
-        F.sum(F.col("will_send").cast("long")).alias("sent"),
-        F.sum((~F.col("halted")).cast("long")).alias("active"),
-        F.sum(F.abs("delta")).alias("sum_delta"),
-        F.max(F.abs("delta")).alias("max_delta"),
-    ]
-    result = eng.run(
-        initial_state=state0,
-        step=step,
-        stats_exprs=stats_exprs,
-        converged=lambda st: st["sent"] == 0 and st["active"] == 0,
-        max_iterations=max_iterations,
-        resume=resume,
-    )
-    scores = apply_scaler(result.state.select("vid", F.col("rank").alias("score")), "score", scaler)
-    if own_csr:
-        csr.unpersist()
-    return CentralityResult(
-        scores=scores,
-        ran_iterations=result.ran_iterations,
-        did_converge=result.did_converge,
-        metrics=result.metrics,
-    )

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.pagerank import page_rank
-from graph_data_science_spark.plans.csr import build_csr_blocks, csr_messages, csr_page_rank
+from graph_data_science_spark.plans.csr import build_csr_blocks, csr_messages
 from graph_data_science_spark.plans.graph import Graph
 from tests.fixtures import PR_EXPECTED, pagerank_graph, vid
 
@@ -34,14 +34,32 @@ def test_csr_pagerank_matches_reference_fixture(spark):
         assert got[vid(name)] == pytest.approx(expected, abs=1e-5), name
 
 
-def test_csr_matches_sql_backend(spark):
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        pytest.param({}, id="default"),
+        pytest.param({"normalized": True}, id="normalized"),
+        pytest.param({"mode": "articlerank"}, id="articlerank"),
+        pytest.param({"source_nodes": [vid("d"), vid("e")]}, id="personalized"),
+        pytest.param({"weighted": True}, id="weighted"),
+    ],
+)
+def test_csr_matches_sql_backend(spark, kwargs):
+    """Both backends share one state machine and differ only in the
+    message kernel, so every option must give the same scores."""
     g = pagerank_graph(spark)
-    sql_scores = {r["vid"]: r["score"] for r in
-                  page_rank(g, tolerance=1e-8, max_iterations=60).scores.collect()}
-    csr_scores = {r["vid"]: r["score"] for r in
-                  page_rank(g, tolerance=1e-8, max_iterations=60, backend="csr").scores.collect()}
+    # non-uniform weights, so the weighted case differs from the unweighted one
+    g = Graph.from_edges(
+        g.edges.withColumn("weight", 1.0 + (F.col("src") + F.col("dst")) % 3), nodes=g.nodes
+    )
+    sql = page_rank(g, tolerance=1e-8, max_iterations=60, **kwargs)
+    csr = page_rank(g, tolerance=1e-8, max_iterations=60, backend="csr", **kwargs)
+    sql_scores = {r["vid"]: r["score"] for r in sql.scores.collect()}
+    csr_scores = {r["vid"]: r["score"] for r in csr.scores.collect()}
+    assert csr_scores.keys() == sql_scores.keys()
     for v in sql_scores:
-        assert csr_scores[v] == pytest.approx(sql_scores[v], abs=1e-9)
+        assert csr_scores[v] == pytest.approx(sql_scores[v], abs=1e-9), v
+    assert csr.ran_iterations == sql.ran_iterations
 
 
 def test_salting_splits_hub_and_preserves_messages(spark):

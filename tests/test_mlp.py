@@ -67,6 +67,26 @@ def test_mlp_fits_xor(spark):
     assert acc > 0.9, f"XOR accuracy {acc}"
 
 
+def test_mlp_l2_penalizes_weights_not_biases(spark):
+    """MLPClassifier's penaltyForBatch sums squared weights only. With
+    all-zero features the weights never reach the logits, so the biases
+    must train identically with and without L2."""
+    rows = [([0.0, 0.0], float(i % 3 == 0)) for i in range(12)]
+    df = spark.createDataFrame(rows, "features array<double>, y double")
+    fits = [
+        mlp.fit_mlp_classifier(
+            df, num_classes=2, hidden_layer_sizes=(), epochs=5,
+            learning_rate=0.1, l2_penalty=l2, tolerance=0.0,
+        )
+        for l2 in (0.0, 1.0)
+    ]
+    (w0, b0), = fits[0].weights
+    (w1, b1), = fits[1].weights
+    assert np.any(b0 != 0.0)
+    np.testing.assert_array_equal(b0, b1)
+    assert not np.array_equal(w0, w1)  # the weights still decay
+
+
 def test_node_classification_mlp_family(spark):
     from graph_data_science_spark.ml.pipelines import node_classification_train
 

@@ -110,30 +110,34 @@ def _diff_sample(srows, ssorted, orows, ocols, osorted):
 
 
 def _compare_one(con, name, sql, srows, scols, spark_s, failures):
-    """DuckDB replay + hash compare for one query (worker-thread body)."""
+    """DuckDB replay + hash compare for one query (worker-thread body).
+
+    Never raises: any error, on either side, is recorded as a failure, so
+    the pipelined consumer thread keeps draining the bounded queue and
+    the producer's `work.put` cannot block forever."""
     t0 = time.time()
-    shash, scount, ssorted = normalize([tuple(r) for r in srows], scols)
     try:
+        shash, scount, ssorted = normalize([tuple(r) for r in srows], scols)
         cur = con.execute(sql)
         ocols = [d[0] for d in cur.description]
         orows = cur.fetchall()
         ohash, ocount, osorted = normalize(orows, ocols)
+        duck_s = time.time() - t0
+        ok = (scount == ocount) and (ssorted == osorted) and (shash == ohash)
+        status = "OK " if ok else "MISMATCH"
+        print(f"[{status}] {name}: spark {scount} rows / oracle {ocount} rows, "
+              f"cols {ssorted} vs {osorted}, hash {'=' if shash == ohash else '!='} "
+              f"(spark {spark_s:.1f}s, duck {duck_s:.1f}s)", flush=True)
+        if not ok:
+            only_s, only_o = _diff_sample(srows, ssorted, orows, ocols, osorted)
+            print("   spark-only:", only_s, flush=True)
+            print("   oracle-only:", only_o, flush=True)
     except Exception as e:
-        print(f"[ORACLE FAIL] {name}: {type(e).__name__}: {str(e)[:300]}",
+        print(f"[COMPARE FAIL] {name}: {type(e).__name__}: {str(e)[:300]}",
               flush=True)
-        failures.append(name)
-        return
-    duck_s = time.time() - t0
-    ok = (scount == ocount) and (ssorted == osorted) and (shash == ohash)
-    status = "OK " if ok else "MISMATCH"
-    print(f"[{status}] {name}: spark {scount} rows / oracle {ocount} rows, "
-          f"cols {ssorted} vs {osorted}, hash {'=' if shash == ohash else '!='} "
-          f"(spark {spark_s:.1f}s, duck {duck_s:.1f}s)", flush=True)
+        ok = False
     if not ok:
         failures.append(name)
-        only_s, only_o = _diff_sample(srows, ssorted, orows, ocols, osorted)
-        print("   spark-only:", only_s, flush=True)
-        print("   oracle-only:", only_o, flush=True)
 
 
 def run_queries(only: set[str] | None) -> list[str]:

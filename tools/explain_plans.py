@@ -1,9 +1,10 @@
 """Capture physical plans for the hot paths → BENCH/PLANS.md.
 
 What to look for (and what the committed output shows):
-  - PageRank superstep message aggregation: partial_sum before the
-    shuffle (map-side combine = the reference's ReducingMessenger) and
-    WholeStageCodegen spans around the join+agg.
+  - PageRank superstep messages, built by the functions page_rank
+    itself calls (sql_messages, csr_messages): the raw (vid, m) rows
+    shuffle to vid with no partial aggregate below that Exchange, and
+    the edge side of the join reads the cached edge table.
   - Parquet scans: PushedFilters + pruned ReadSchema (only the columns
     a query touches reach the scan).
   - CSR cogroup: the blocks side reuses its existing hash partitioning
@@ -22,8 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.pagerank import edges_by_source, sql_messages
 from graph_data_science_spark.session import get_spark
-from graph_data_science_spark.plans.graph import Graph
 from graph_data_science_spark.plans.csr import build_csr_blocks, csr_messages
 from graph_data_science_spark.sources.generator import random_graph
 
@@ -46,18 +47,18 @@ def main():
 
     # 1. PageRank superstep message plan (SQL backend)
     g = random_graph(spark, 10000, 8, seed=42)
-    deg = g.degrees()
-    state = deg.select("vid", F.col("degree").alias("deg"),
-                       F.lit(0.15).alias("delta"), F.lit(True).alias("will_send"))
-    senders = state.filter("will_send").select(
-        F.col("vid").alias("e_src"), (F.col("delta") / F.col("deg")).alias("contrib"))
-    edges_renamed = g.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    msgs = (senders.join(edges_renamed, "e_src")
-            .groupBy(F.col("e_dst").alias("vid"))
-            .agg(F.sum("contrib").alias("msg_sum")))
+    senders = g.degrees().filter(F.col("degree") > 0).select(
+        "vid", (F.lit(0.15) / F.col("degree")).alias("contrib"))
+    edges = edges_by_source(g)
+    msgs = sql_messages(edges, senders, weighted=False)
     sections.append(("PageRank superstep messages (SQL backend)\n\n"
-                     "Check: partial aggregation (map-side combine) below the "
-                     "Exchange; whole-stage codegen around join+agg.",
+                     "Check: the Exchange under the aggregates is "
+                     "hashpartitioning(vid, 8), REPARTITION_BY_NUM over the "
+                     "raw (vid, m) Project, and both the partial_sum and the "
+                     "final sum HashAggregate sit above it (no map-side "
+                     "combine). The edge side of the join reads the cached "
+                     "InMemoryRelation, hash-partitioned and sorted on e_src; "
+                     "at this size the planner broadcasts it.",
                      captured_explain(msgs)))
 
     # 2. Parquet scan pruning/pushdown
@@ -72,13 +73,14 @@ def main():
 
     # 3. CSR cogroup superstep (blocks side pre-partitioned)
     csr = build_csr_blocks(g, num_blocks=8)
-    active = state.filter("will_send").select("vid", (F.col("delta") / F.col("deg")).alias("contrib"))
-    m2 = csr_messages(csr, active, weighted=False)
+    m2 = csr_messages(csr, senders, weighted=False)
     sections.append(("CSR-block SpMV messages (csr backend)\n\n"
                      "Check: FlatMapCoGroupsInPandas with the blocks side fed "
                      "by its persisted hash partitioning (single Exchange on "
                      "the small routed-state side only).",
                      captured_explain(m2)))
+    edges.unpersist()
+    csr.unpersist()
 
     with open(OUT, "w") as fh:
         fh.write("# Physical plans of the hot paths\n\n")
