@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.dijkstra import _reconstruct
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -77,7 +77,6 @@ def astar(
         if col not in graph.nodes.columns:
             raise ValueError(f"The property `{col}` has not been loaded")
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     trow = graph.nodes.filter(F.col("vid") == target).select(
         F.col(latitude_col).alias("tlat"), F.col(longitude_col).alias("tlon")
@@ -86,14 +85,12 @@ def astar(
         raise ValueError(f"target {target} not in graph")
     tlat, tlon = float(trow[0]["tlat"]), float(trow[0]["tlon"])
 
-    edges = (
+    edges = cache_on(
         graph.edges.select(
             F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
             F.col("weight").alias("cost"),
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+        ),
+        "e_src",
     )
     state0 = graph.nodes.select(
         "vid",

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.dijkstra import _reconstruct
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -59,20 +59,17 @@ def bellman_ford(
     """gds.bellmanFord. max_iterations defaults to nodeCount + 2 (enough
     to push any tentative length past the n+1 cycle bound)."""
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.nodes.count()
     length_bound = n + 1  # BellmanFordTask: a loopless path has <= n nodes
     if max_iterations is None:
         max_iterations = n + 2
 
-    edges = (
+    edges = cache_on(
         graph.edges.select(
             F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
             F.col("weight").alias("cost"),
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+        ),
+        "e_src",
     )
     state0 = graph.nodes.select(
         "vid",

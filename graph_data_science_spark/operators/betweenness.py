@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph, Orientation
 from graph_data_science_spark.plans.lineage import cut_lineage
 
@@ -225,14 +225,11 @@ def betweenness(
         if batch:
             yield batch
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-        .repartition(n_part, "e_src").sortWithinPartitions("e_src").persist()
+    edges = cache_on(
+        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst")), "e_src"
     )
-    redges = (
-        graph.edges.select(F.col("dst").alias("e_src"), F.col("src").alias("e_dst"))
-        .repartition(n_part, "e_src").sortWithinPartitions("e_src").persist()
+    redges = cache_on(
+        graph.edges.select(F.col("dst").alias("e_src"), F.col("src").alias("e_dst")), "e_src"
     )
 
     bc = nodes.select("vid", F.lit(0.0).alias("score"))

@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -57,8 +57,7 @@ def multi_source_hop_distances(
         edges = graph.edges.select(F.col("dst").alias("e_src"), F.col("src").alias("e_dst"))
     else:
         edges = graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.repartition(n_part, "e_src").sortWithinPartitions("e_src").persist()
+    edges = cache_on(edges, "e_src")
 
     # O(1)-size init expression regardless of k (a k-wide literal
     # F.array(*[F.when...]) costs Catalyst seconds of analysis+codegen per

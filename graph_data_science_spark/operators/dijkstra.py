@@ -33,7 +33,7 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -58,15 +58,12 @@ def _parent_fixpoint(
     changed). Message = struct(cand_dist, sender); min over structs picks
     the smallest cost, ties toward the smallest sender id."""
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
+    edges = cache_on(
         graph.edges.select(
             F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
             F.col("weight").alias("cost"),
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+        ),
+        "e_src",
     )
     state0 = graph.nodes.select(
         "vid",

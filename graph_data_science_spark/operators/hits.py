@@ -7,9 +7,10 @@ OpenGdsProcedureSmokeTest.java). Semantics: iterate
 with global L2 normalization of each vector per iteration
 (masterCompute), until max change <= tolerance or hitsIterations.
 
-Spark plan per iteration: two gather joins (one per direction) against
-the pre-partitioned cached edge table + two global L2 aggregates
-(driver-side masterCompute, like the reference).
+Spark plan per iteration: two gather joins (one per direction), each a
+co-partitioned merge join against the edge table cached on that join's
+key, + two global L2 aggregates (driver-side masterCompute, like the
+reference).
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 
@@ -39,13 +40,10 @@ def hits(
     engine: PregelEngine | None = None,
 ) -> HitsResult:
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    # one cached copy per gather key, so both joins are co-partitioned
+    # merge joins and neither step shuffles the edge table
+    by_src = cache_on(graph.edges.select("src", "dst"), "src")
+    by_dst = cache_on(graph.edges.select("src", "dst"), "dst")
 
     state0 = graph.nodes.select(
         "vid", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"),
@@ -63,7 +61,7 @@ def hits(
     def step(state: DataFrame, s: int) -> DataFrame:
         hubs = state.select(F.col("vid").alias("src"), F.col("hub").alias("h"))
         auth_raw = (
-            edges.join(hubs, "src")
+            by_src.join(hubs, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("h").alias("auth_raw"))
         )
@@ -80,7 +78,7 @@ def hits(
 
         auths = with_auth.select(F.col("vid").alias("dst"), F.col("auth_new").alias("a"))
         hub_raw = (
-            edges.join(auths, "dst")
+            by_dst.join(auths, "dst")
             .groupBy(F.col("src").alias("vid"))
             .agg(F.sum("a").alias("hub_raw"))
         )
@@ -110,7 +108,8 @@ def hits(
         converged=lambda st: (st["max_delta"] or 0.0) <= tolerance,
         max_iterations=hits_iterations,
     )
-    edges.unpersist()
+    by_src.unpersist()
+    by_dst.unpersist()
     return HitsResult(
         scores=result.state.select("vid", "hub", F.col("auth").alias("authority")),
         ran_iterations=result.ran_iterations,

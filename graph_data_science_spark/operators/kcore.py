@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph, Orientation
 
 
@@ -45,7 +45,9 @@ def k_core_decomposition(
         )
     else:
         e = e.select("src", "dst")
-    e = e.filter(F.col("src") != F.col("dst")).distinct().persist()
+    # cached on the gather key (dst), so the step's edges ⋈ state is a
+    # co-partitioned merge join (the distinct alone hashes on (src, dst))
+    e = cache_on(e.filter(F.col("src") != F.col("dst")).distinct(), "dst")
     edges_renamed = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
 
     deg = e.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("core"))

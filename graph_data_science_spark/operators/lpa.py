@@ -34,7 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 
@@ -80,10 +80,7 @@ def label_propagation(
         )
     spark = graph.edges.sparkSession
     # co-partition + sort once on the gather key (dst), reuse per superstep
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.repartition(n_part, "dst").sortWithinPartitions("dst").persist()
-    )
+    edges = cache_on(graph.edges, "dst")
 
     nodes = graph.nodes
     if seed_col is not None:

@@ -34,9 +34,11 @@ reads:
   backend="csr": `plans/csr.py:csr_messages` over `build_csr_blocks`,
     a cogrouped numpy SpMV per CSR block — the north-rule hot path.
 
-Spark plan per superstep (backend="sql"):
+Spark plan per superstep (backend="sql"), one job of two stages:
   senders = state.filter(will_send)            # vote-bits as a filter
-  msgs    = senders ⋈ edges ON vid = src       # the gather/scatter join
+  msgs    = senders ⋈ edges ON vid = src       # co-partitioned merge join:
+                                               # no Exchange, no Sort, no
+                                               # broadcast on either side
             .repartition(dst)                  # raw (dst, m) shuffle
             .groupBy(dst).sum(delta/deg * w)
   state'  = state left-join msgs, update (rank, delta, halted, will_send)
@@ -51,7 +53,7 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine, PregelResult
+from graph_data_science_spark.operators.pregel import PregelEngine, PregelResult, cache_on
 from graph_data_science_spark.operators.scaling import apply_scaler
 from graph_data_science_spark.plans.graph import Graph
 
@@ -67,16 +69,16 @@ class CentralityResult:
 def edges_by_source(graph: Graph) -> DataFrame:
     """The sql backend's cached input: (e_src, e_dst, weight), hash-
     partitioned + sorted on e_src. The cached InMemoryRelation preserves
-    outputPartitioning/outputOrdering, so every superstep's senders ⋈
-    edges reuses it — only the (small) sender side shuffles. At 10^9+
-    edges this is the difference between shuffling the edge table per
-    superstep and never shuffling it again. The caller unpersists it."""
-    n_part = int(graph.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight")
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+    outputPartitioning/outputOrdering, and so does the engine's
+    checkpointed state on vid, so under the engine's loop conf (no
+    auto-broadcast) every superstep's senders ⋈ edges is a co-partitioned
+    sort-merge join: no Exchange and no Sort on either input. At 10^9+
+    edges this is the difference between shuffling (or broadcasting) the
+    edge table per superstep and never moving it again. The caller
+    unpersists it."""
+    return cache_on(
+        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight"),
+        "e_src",
     )
 
 
@@ -258,20 +260,11 @@ def eigenvector(
         F.lit(init).alias("rank"),
         F.lit(float("inf")).alias("delta"),
     )
-    edges_renamed = graph.edges.select(
-        F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight"
-    )
-    w = F.col("weight") if weighted else F.lit(1.0)
+    edges = edges_by_source(graph)
     from graph_data_science_spark.plans.lineage import cut_lineage
 
     def step(state: DataFrame, s: int) -> DataFrame:
-        msgs = (
-            state.select(F.col("vid").alias("e_src"), "rank")
-            .join(edges_renamed, "e_src")
-            .select(F.col("e_dst").alias("vid"), (F.col("rank") * w).alias("m"))
-            .groupBy("vid")
-            .agg(F.sum("m").alias("msg_sum"))
-        )
+        msgs = sql_messages(edges, state.select("vid", F.col("rank").alias("contrib")), weighted)
         raw = state.join(msgs, "vid", "left").select(
             "vid",
             "deg",
@@ -307,5 +300,6 @@ def eigenvector(
         converged=lambda st: (st["max_delta"] or 0.0) <= tolerance,
         max_iterations=max_iterations,
     )
+    edges.unpersist()
     scores = apply_scaler(result.state.select("vid", F.col("rank").alias("score")), "score", scaler)
     return CentralityResult(scores, result.ran_iterations, result.did_converge, result.metrics)

@@ -26,7 +26,7 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -52,15 +52,12 @@ def _distance_fixpoint(
     (the frontier). BFS and SSSP differ only in edge_cost."""
     spark = graph.edges.sparkSession
     sources = list(source_nodes)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
+    edges = cache_on(
         graph.edges.select(
             F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
             edge_cost.alias("cost"),
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+        ),
+        "e_src",
     )
 
     state0 = graph.nodes.select(
@@ -142,12 +139,8 @@ def topological_sort(
     accumulated an unbounded unionByName and leaked one cached frame per
     layer on deep DAGs) and gives checkpoint/resume for free."""
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+    edges = cache_on(
+        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst")), "e_src"
     )
     indeg0 = (
         graph.nodes.select("vid")
@@ -217,14 +210,9 @@ def longest_path(
     nondeterministic there; we pin it for engine-portable results). Nodes
     on cycles never drain and are skipped, like the reference."""
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.select(
-            F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight"
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+    edges = cache_on(
+        graph.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight"),
+        "e_src",
     )
     indeg0 = (
         graph.nodes.select("vid")

@@ -28,14 +28,19 @@ The engine is algorithm-agnostic: an algorithm provides
 Every superstep is exactly ONE Spark job: the stats ride the action that
 materializes the new state (`observe` on the localCheckpoint or on the
 snapshot write), so convergence is checked after every superstep at no
-extra job.
+extra job. `loop_conf` holds the run's plan policy: AQE off and
+auto-broadcast joins off, so each step's gather join is a sort-merge
+join between the cached edge table and the checkpointed state, both
+already hash-partitioned and sorted on the join key — no Exchange on
+either side and no broadcast job.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
@@ -109,23 +114,11 @@ class PregelEngine:
         if state is None:
             raise ValueError("no initial state and nothing to resume from")
 
-        # AQE re-plans (and re-submits) stage by stage, which serializes the
-        # superstep chain on the driver: measured 2.6x wall inflation and a
-        # ~2.1 s/superstep driver gap with AQE on vs ~0.5 s with it off
-        # (tools/stage_profile.py, 8.4M edges, local[8]). The iterative loop
-        # has a FIXED, known shape — partition counts are chosen up front —
-        # so runtime re-planning buys nothing here. Disable it for the loop
-        # and restore the caller's setting after (AQE stays on for one-shot
-        # analytics queries, where skew-splitting/coalescing do help).
-        conf = self.spark.conf
-        old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-
         local_cut: DataFrame | None = None  # this run's previous localCheckpoint
         did_converge = False
         ran = start_superstep
         t0 = time.time()
-        try:
+        with loop_conf(self.spark):
             for s in range(start_superstep, max_iterations):
                 obs = Observation()
                 new_state = step(state, s).observe(obs, *stats_exprs)
@@ -168,10 +161,56 @@ class PregelEngine:
                     did_converge = True
                     break
 
-        finally:
-            conf.set("spark.sql.adaptive.enabled", old_aqe)
-
         return PregelResult(state=state, ran_iterations=ran, did_converge=did_converge, metrics=metrics)
+
+
+# AQE re-plans (and re-submits) stage by stage, which serializes the
+# superstep chain on the driver: measured 2.6x wall inflation and a
+# ~2.1 s/superstep driver gap with AQE on vs ~0.5 s with it off
+# (tools/stage_profile.py, 8.4M edges, local[8]). The iterative loop has
+# a FIXED, known shape — partition counts are chosen up front — so
+# runtime re-planning buys nothing here (AQE stays on for one-shot
+# analytics queries, where skew-splitting/coalescing do help).
+# Auto-broadcast is off for the same reason: the steps cache their edge
+# table hash-partitioned and sorted on the join key, and below the
+# session's 64 MB threshold the planner would broadcast that cached
+# table every superstep — a collect job, a driver-built hash relation
+# and a broadcast per step, where a co-partitioned merge join needs no
+# exchange at all. Measured on perfbench pr_hub_durable (958,748 edges,
+# 20 supersteps, local[4]): 48 -> 23 jobs, driver gap 8.9 -> 5.1 s,
+# driver old-gen peak 1312 -> 634 MB, solve_s median 32.6 -> 25.2 s.
+# Explicit F.broadcast hints still apply.
+LOOP_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextmanager
+def loop_conf(spark: SparkSession) -> Iterator[None]:
+    """Run the body under LOOP_CONF; the caller's values come back even
+    when the body raises."""
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in LOOP_CONF}
+    for k, v in LOOP_CONF.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
+def cache_on(df: DataFrame, key: str) -> DataFrame:
+    """df hash-partitioned on `key` (spark.sql.shuffle.partitions ways),
+    sorted within partitions and cached, so a step's join on `key` reads
+    it in place. Planned under LOOP_CONF: with AQE on, the cached
+    relation would report no partitioning until its first use has
+    materialized it, and the first superstep would shuffle it once more.
+    The caller unpersists it."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    with loop_conf(df.sparkSession):
+        return df.repartition(n_part, key).sortWithinPartitions(key).persist()
 
 
 def _release(df: DataFrame) -> None:

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.dijkstra import _reconstruct
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _INF = float("inf")
@@ -59,18 +59,15 @@ def steiner_tree(
     engine: PregelEngine | None = None,
 ) -> SteinerTreeResult:
     spark = graph.edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     terminals = [int(t) for t in terminals]
     remaining = set(terminals)
 
-    edges = (
+    edges = cache_on(
         graph.edges.select(
             F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
             F.col("weight").alias("cost"),
-        )
-        .repartition(n_part, "e_src")
-        .sortWithinPartitions("e_src")
-        .persist()
+        ),
+        "e_src",
     )
     state = graph.nodes.select(
         "vid",

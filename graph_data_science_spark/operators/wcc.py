@@ -17,8 +17,9 @@ Options mirrored from WccBaseConfig.java:30-46:
     (HugeAtomicDisjointSetStruct.java:129-146), reproduced post-hoc via
     dense_rank over unseeded representatives.
 
-Scale notes: each superstep is one self-equi-join state⋈edges (shuffle on
-the join key) + a min-combine groupBy — Catalyst does map-side partial
+Scale notes: each superstep is one equi-join state⋈edges (a co-partitioned
+merge join: the cached edges and the checkpointed state are both hashed
+on the key) + a min-combine groupBy — Catalyst does map-side partial
 min so hub vertices receive at most one candidate per shuffle partition
 (no skew blow-up). Convergence in O(diameter) supersteps, or O(log
 diameter) with the star_contraction option (pointer jumping
@@ -34,7 +35,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph, Orientation
 
 
@@ -80,10 +81,7 @@ def wcc(
     else:
         edges = edges.select("src", "dst")
     # co-partition + sort once, reuse across supersteps (see pagerank.py)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        edges.repartition(n_part, "src").sortWithinPartitions("src").persist()
-    )
+    edges = cache_on(edges, "src")
 
     state0 = graph.nodes.select(
         "vid", F.col("vid").alias("comp"), F.lit(True).alias("changed")

@@ -50,6 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.pregel import cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 _BLOCK_SCHEMA = (
@@ -131,7 +132,9 @@ def build_csr_blocks(
         .repartition(num_blocks, "block")
         .persist()
     )
-    routes = e.select("src", "block").distinct().withColumnRenamed("src", "vid").persist()
+    # cached on vid, like the engine's state, so the per-superstep route
+    # join is a co-partitioned merge join
+    routes = cache_on(e.select("src", "block").distinct().withColumnRenamed("src", "vid"), "vid")
     blocks.count()  # materialize
     routes.count()
     return CsrGraph(blocks=blocks, routes=routes, num_blocks=num_blocks)

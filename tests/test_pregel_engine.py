@@ -7,15 +7,20 @@ the durable snapshot, identical final results.
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.pagerank import page_rank
+from graph_data_science_spark.operators.hits import hits
+from graph_data_science_spark.operators.kcore import k_core_decomposition
+from graph_data_science_spark.operators.lpa import label_propagation
+from graph_data_science_spark.operators.pagerank import eigenvector, page_rank
 from graph_data_science_spark.operators.paths import bfs
 from graph_data_science_spark.operators.pregel import PregelEngine
 from graph_data_science_spark.operators.wcc import wcc
 from graph_data_science_spark.plans.graph import Graph
+from graph_data_science_spark.sources.generator import random_graph
 from tests.fixtures import pagerank_graph, wcc_chain_graph
 
 
@@ -131,3 +136,120 @@ def test_snapshot_lineage_stats_match_metrics(spark, tmp_ckpt):
     for s in snapshots:
         assert eng.manager.lineage(s)["stats"] == records[s]
         assert records[s]["checkpointed"] is True
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_superstep_is_one_job(spark):
+    # no broadcast job per superstep: the step's joins run inside the
+    # engine's one materializing job
+    g = pagerank_graph(spark)
+    jobs = {
+        k: _jobs_in_group(
+            spark, f"pr-jobs-{k}",
+            lambda: page_rank(g, tolerance=0, max_iterations=k).scores.collect(),
+        )
+        for k in (3, 6)
+    }
+    assert jobs[6] - jobs[3] == 3
+
+
+def test_loop_conf_restored_when_a_step_raises(spark):
+    conf = spark.conf
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    before = {k: conf.get(k) for k in keys}
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "12345")
+    seen = {}
+
+    def step(state, s):
+        seen.update({k: conf.get(k) for k in keys})
+        raise RuntimeError("boom")
+
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            PregelEngine(spark).run(
+                initial_state=spark.range(3).select(F.col("id").alias("vid")),
+                step=step,
+                stats_exprs=[F.count(F.lit(1)).alias("n")],
+                converged=lambda st: False,
+                max_iterations=2,
+            )
+        assert seen == {"spark.sql.adaptive.enabled": "false",
+                        "spark.sql.autoBroadcastJoinThreshold": "-1"}
+        assert conf.get("spark.sql.autoBroadcastJoinThreshold") == "12345"
+        assert conf.get("spark.sql.adaptive.enabled") == before["spark.sql.adaptive.enabled"]
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", before["spark.sql.autoBroadcastJoinThreshold"])
+
+
+def _plan_tree(description: str) -> list[tuple[int, str]]:
+    """(indent, node name) per line of a formatted physical plan's tree."""
+    tree = description.split("\n\n")[0].splitlines()[1:]  # under "== Physical Plan =="
+    nodes = []
+    for line in tree:
+        indent = re.match(r"[ :+\-]*", line).end()
+        nodes.append((indent, line[indent:].lstrip("* ").split(" ")[0]))
+    return nodes
+
+
+def _edge_join_inputs(description: str) -> list[list[str]]:
+    """For each cached-table scan that feeds a join: the nodes between the
+    scan and that join."""
+    nodes = _plan_tree(description)
+    chains = []
+    for i, (indent, name) in enumerate(nodes):
+        if name != "InMemoryTableScan":
+            continue
+        chain, level = [], indent
+        for j in range(i - 1, -1, -1):
+            if nodes[j][0] >= level:
+                continue
+            level, parent = nodes[j]
+            if parent.endswith("Join"):
+                chains.append(chain)
+                break
+            if parent.endswith(("Aggregate", "Window", "CollectMetrics")):
+                break
+            chain.append(parent)
+    return chains
+
+
+_OPS = {
+    "page_rank": lambda g: page_rank(g, tolerance=0, max_iterations=3),
+    "wcc": lambda g: wcc(g, max_iterations=3),
+    "label_propagation": lambda g: label_propagation(g, max_iterations=3),
+    "k_core_decomposition": lambda g: k_core_decomposition(g, max_iterations=3),
+    "hits": lambda g: hits(g, hits_iterations=3, tolerance=0),
+    "eigenvector": lambda g: eigenvector(g, max_iterations=3, tolerance=0),
+    "bfs": lambda g: bfs(g, [0], max_iterations=3),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_engine_steps_never_move_the_edge_table(spark, op):
+    # every gather join reads its cached edge table in place: no
+    # BroadcastExchange, and no Exchange or Sort between the edge scan
+    # and the merge join
+    g = random_graph(spark, 300, 4, seed=3)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last_id = max((e.executionId() for e in executions()), default=-1)
+    _OPS[op](g)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last_id]
+    assert not any("BroadcastExchange" in p for p in plans)
+    chains = [c for p in plans for c in _edge_join_inputs(p)]
+    assert chains, "no join over a cached edge table was planned"
+    assert all(not {"Exchange", "Sort"} & set(c) for c in chains), chains

@@ -1,9 +1,16 @@
-"""Probe: count Exchange operators per pagerank superstep plan.
+"""Probe: count the exchanges in a mid-loop PageRank superstep plan.
 
-Reproduces the sql-backend superstep chain and prints the formatted
-physical plan of a mid-loop superstep, so we can see whether the state
-side of `senders join edges` and `state join msgs` re-shuffles (i.e.
-whether HashPartitioning survives persist/localCheckpoint truncation).
+Builds the sql-backend superstep from the functions page_rank itself
+calls (edges_by_source, sql_messages) under the engine's loop conf
+(pregel.loop_conf), runs one superstep, then plans the next one from
+three kinds of state: the engine's eager localCheckpoint, a lazy
+localCheckpoint, and cut_lineage. For each it counts hash Exchanges and
+BroadcastExchanges, so we can see whether the state side of
+`senders join edges` and `state join msgs` re-shuffles (i.e. whether
+HashPartitioning survives the lineage cut) and whether anything is
+broadcast. It prints the plan of the first.
+
+    python tools/probe_exchanges.py
 """
 import os
 import re
@@ -13,85 +20,68 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.pagerank import edges_by_source, sql_messages
+from graph_data_science_spark.operators.pregel import loop_conf
+from graph_data_science_spark.plans.lineage import cut_lineage
 from graph_data_science_spark.session import get_spark
 from graph_data_science_spark.sources.generator import random_graph
 
-spark = get_spark(app_name="probe", cores=8, shuffle_partitions=8, driver_memory="8g")
-spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-g = random_graph(spark, 200_000, 8, seed=42)
-n_part = 8
-edges_renamed = (
-    g.edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "weight")
-    .repartition(n_part, "e_src")
-    .sortWithinPartitions("e_src")
-    .persist()
-)
-edges_renamed.count()
-
-deg = g.degrees(direction="out")
-alpha = 0.15
-state = deg.select(
-    "vid",
-    F.col("degree").alias("deg"),
-    F.lit(alpha).alias("rank"),
-    F.lit(alpha).alias("delta"),
-    F.lit(False).alias("halted"),
-    (F.col("degree") > 0).alias("will_send"),
-)
-
-
-def step(state):
+def step(edges, state):
     senders = state.filter(F.col("will_send")).select(
-        F.col("vid").alias("e_src"), (F.col("delta") / F.col("deg")).alias("contrib")
+        "vid", (F.col("delta") / F.col("deg")).alias("contrib")
     )
-    msgs_raw = senders.join(edges_renamed, "e_src").select(
-        F.col("e_dst").alias("vid"), F.col("contrib").alias("m")
-    )
-    msgs_raw = msgs_raw.repartition(n_part, "vid")
-    msgs = msgs_raw.groupBy("vid").agg(F.sum("m").alias("msg_sum"))
-    joined = state.join(msgs, "vid", "left")
-    computes = F.col("msg_sum").isNotNull() | ~F.col("halted")
-    new_delta = F.when(
-        computes, 0.85 * F.coalesce(F.col("msg_sum"), F.lit(0.0))
-    ).otherwise(F.col("delta"))
-    return joined.select(
+    msgs = sql_messages(edges, senders, weighted=False)
+    delta = 0.85 * F.coalesce(F.col("msg_sum"), F.lit(0.0))
+    return state.join(msgs, "vid", "left").select(
         "vid",
         "deg",
-        F.when(computes, F.col("rank") + new_delta).otherwise(F.col("rank")).alias("rank"),
-        new_delta.alias("delta"),
-        F.when(computes, ~(new_delta > 1e-6)).otherwise(F.col("halted")).alias("halted"),
-        (computes & (new_delta > 1e-6) & (F.col("deg") > 0)).alias("will_send"),
+        (F.col("rank") + delta).alias("rank"),
+        delta.alias("delta"),
+        ((delta > 1e-6) & (F.col("deg") > 0)).alias("will_send"),
     )
 
 
 def count_exchanges(df):
+    """(hash Exchanges, BroadcastExchanges, plan) of df's executed plan,
+    not counting the build plans under a cached InMemoryRelation."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    shuffles = len(re.findall(r"Exchange hashpartitioning", plan))
-    return shuffles, plan
+    kept, cache_indent = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if cache_indent is not None and indent > cache_indent:
+            continue
+        cache_indent = indent if "InMemoryRelation" in line else None
+        kept.append(line)
+    top = "\n".join(kept)
+    return len(re.findall(r"Exchange hashpartitioning", top)), top.count("BroadcastExchange"), plan
 
 
-# superstep 1 from raw state
-s1 = step(state)
-# mimic engine: persist + agg + localCheckpoint(eager=True)
-s1 = s1.persist()
-s1.agg(F.sum(F.col("will_send").cast("long"))).collect()
-s1ck = s1.localCheckpoint(eager=True)
+def main():
+    spark = get_spark(app_name="probe", cores=8, shuffle_partitions=8, driver_memory="8g")
+    g = random_graph(spark, 200_000, 8, seed=42)
+    edges = edges_by_source(g)
+    state0 = g.degrees(direction="out").select(
+        "vid",
+        F.col("degree").alias("deg"),
+        F.lit(0.15).alias("rank"),
+        F.lit(0.15).alias("delta"),
+        (F.col("degree") > 0).alias("will_send"),
+    )
+    with loop_conf(spark):
+        s1 = step(edges, state0).localCheckpoint(eager=True)
+        states = [
+            ("localCheckpoint (the engine's)", s1),
+            ("lazy localCheckpoint", step(edges, s1).localCheckpoint(eager=False)),
+            ("cut_lineage", cut_lineage(step(edges, s1))),
+        ]
+        for i, (name, state) in enumerate(states):
+            shuffles, broadcasts, plan = count_exchanges(step(edges, state))
+            print(f"=== superstep from {name}: exchanges = {shuffles}, broadcasts = {broadcasts}")
+            if i == 0:
+                print(plan[:4000])
+    edges.unpersist()
 
-# superstep 2 from the checkpointed state
-s2 = step(s1ck)
-n, plan = count_exchanges(s2)
-print("=== superstep-from-localCheckpoint: exchanges =", n)
-print(plan[:4000])
 
-# also: what does a lazy localCheckpoint mid-chain look like
-s2l = step(s2.localCheckpoint(eager=False))
-n2, plan2 = count_exchanges(s2l)
-print("=== superstep-from-lazy-ckpt: exchanges =", n2)
-
-# and via cut_lineage (stats reset path)
-from graph_data_science_spark.plans.lineage import cut_lineage
-
-s2c = step(cut_lineage(s1))
-n3, _p3 = count_exchanges(s2c)
-print("=== superstep-from-cut_lineage: exchanges =", n3)
+if __name__ == "__main__":
+    main()
