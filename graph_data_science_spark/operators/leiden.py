@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from graph_data_science_spark.plans.graph import Graph, Orientation
 from graph_data_science_spark.plans.lineage import cut_lineage
 from graph_data_science_spark.operators.louvain import _COLOR_CHAIN
+from graph_data_science_spark.operators.pregel import loop_conf
 
 
 @dataclass
@@ -359,21 +360,11 @@ def leiden(
     partition, maintainPartition re-seeding. Unseeded community ids are
     representative node ids; seeded runs map them back to the original
     seed labels (SeedCommunityManager)."""
-    spark = graph.edges.sparkSession
-    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    # same loop pathologies as louvain(): broadcast-in-materialization
-    # deadlocks + AQE sizeInBytes blowup — disabled for the run
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_conf(graph.edges.sparkSession):
         return _leiden_impl(
             graph, max_levels, gamma, theta, tolerance, random_seed, seed,
             include_intermediate, max_sweeps,
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 def _leiden_impl(

@@ -29,10 +29,11 @@ as WCC's union-by-min ids).
 
 Scale notes (100 TB discipline): per iteration the big tables touched are
 edges ⋈ assignment (shuffle on dst, then groupBy (src, community) — both
-map-side-combined) and the community-total aggregate (|communities| rows,
-broadcast when small). No driver-side row data ever; only scalar
-modularity / move-count aggregates. Condensation shrinks the edge table
-geometrically, so level>0 cost is a fraction of level 0.
+map-side-combined) and the community-total aggregate (|communities| rows;
+no join is auto-broadcast under `pregel.loop_conf`). No driver-side row
+data ever; only scalar modularity / move-count aggregates. Condensation
+shrinks the edge table geometrically, so level>0 cost is a fraction of
+level 0.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.pregel import loop_conf
 from graph_data_science_spark.plans.graph import Graph, Orientation
 from graph_data_science_spark.plans.lineage import cut_lineage
 
@@ -287,12 +289,7 @@ def modularity_optimization(
     Defaults mirror ModularityOptimizationBaseConfig (maxIterations=10,
     tolerance=1e-4). Community ids are relabeled to the min member vid
     unless seeded."""
-    spark = graph.edges.sparkSession
-    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_conf(graph.edges.sparkSession):
         edges = _canonical_edges(graph).filter(F.col("src") != F.col("dst")).persist()
         self_w = (
             _canonical_edges(graph)
@@ -306,6 +303,8 @@ def modularity_optimization(
             self_w.agg(F.sum("w_self")).collect()[0][0] or 0.0
         )
         if m <= 0:
+            edges.unpersist()
+            self_w.unpersist()
             return ModularityOptimizationResult(
                 communities=node_ids.select("vid", F.col("vid").alias("community")),
                 modularity=0.0, ran_iterations=0, did_converge=True,
@@ -335,9 +334,6 @@ def modularity_optimization(
             ran_iterations=iters,
             did_converge=iters < max_iterations,
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 def louvain(
@@ -357,22 +353,7 @@ def louvain(
     count stops shrinking, one community remains, or modularity gain
     <= tolerance (hasConverged :264-272).
     """
-    spark = graph.edges.sparkSession
-    # Broadcast joins inside a localCheckpoint/persist materialization can
-    # deadlock a straggler task (BroadcastExchange scheduled from within the
-    # materializing job — the same failure mode round 1 hit with eigenvector's
-    # broadcast-in-cached-plan). The loop's build sides are small; SMJ/SHJ
-    # costs little here, so disable broadcasts for the duration.
-    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # AQE re-optimizes per stage; its join-size re-estimation multiplies
-    # sizeInBytes across the join chain into astronomically large BigInts
-    # (measured: driver CPU-bound in BigInteger.multiplyToomCook3 under
-    # AdaptiveSparkPlanExec.reOptimize). The loop's shape is fixed — no
-    # runtime re-planning needed, same reasoning as PregelEngine.
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_conf(graph.edges.sparkSession):
         edges = _canonical_edges(graph).filter(F.col("src") != F.col("dst"))
         self_w = (
             _canonical_edges(graph)
@@ -495,6 +476,3 @@ def louvain(
             did_converge=did_converge,
             dendrogram=dendrogram if include_intermediate else None,
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

@@ -24,14 +24,20 @@ Spark plan per superstep: edges ⋈ labels ON edges.dst = labels.vid
 (gather neighbor labels) → groupBy(src, label).sum(w) → window
 row_number() over (partition by src order by weight desc, label asc) = 1
 (argmax with min-label tie-break) → compare/update.
+
+mode="block_async" runs on the same PregelEngine loop with a different
+step: salted blocks → edges ⋈ labels → cogroup applyInPandas (in-place
+updates within a block). Either mode is one Spark job per superstep,
+honours the caller's `engine`/`resume`, and counts iterations the
+engine's (reference) way.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
@@ -66,22 +72,42 @@ def label_propagation(
     are read at last-superstep values (sync). The per-iteration salt
     re-partitions the blocks, so any oscillating cross-block pair
     co-locates within a few iterations and settles. Deterministic for a
-    fixed `blocks`. mode="async_serial" executes the native algorithm
-    EXACTLY (sequential by mapped id, ComputeStep.java:80-90) — the
-    parity/debug path; it materializes the graph on the driver, so it
+    fixed `blocks`. Both modes run on the PregelEngine: one Spark job and
+    one metrics record per superstep, the caller's `engine`/`resume`
+    honoured, and the reference's iteration counting (the converging
+    superstep is not counted). mode="async_serial" executes the native
+    algorithm EXACTLY (sequential by mapped id, ComputeStep.java:80-90) —
+    the parity/debug path; it materializes the graph on the driver, so it
     refuses to run above validation scale."""
     if mode == "async_serial":
         return _label_propagation_async_serial(
             graph, max_iterations, seed_col, node_weight_col
         )
-    if mode == "block_async":
-        return _label_propagation_block_async(
-            graph, max_iterations, seed_col, node_weight_col, blocks
-        )
-    spark = graph.edges.sparkSession
     # co-partition + sort once on the gather key (dst), reuse per superstep
     edges = cache_on(graph.edges, "dst")
+    step = _block_async_step(edges, blocks) if mode == "block_async" else _sync_step(edges)
+    eng = engine or PregelEngine(graph.edges.sparkSession)
+    result = eng.run(
+        initial_state=_initial_state(graph, seed_col, node_weight_col),
+        step=step,
+        stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
+        converged=lambda st: (st["changed_count"] or 0) == 0,
+        max_iterations=max_iterations,
+        resume=resume,
+    )
+    edges.unpersist()
+    return LpaResult(
+        labels=result.state.select("vid", "label"),
+        ran_iterations=result.ran_iterations,
+        did_converge=result.did_converge,
+        metrics=result.metrics,
+    )
 
+
+def _initial_state(
+    graph: Graph, seed_col: str | None, node_weight_col: str | None
+) -> DataFrame:
+    """(vid, label, nw): the seeded labels and node weights (InitStep)."""
     nodes = graph.nodes
     if seed_col is not None:
         max_seed = nodes.agg(F.max(F.col(seed_col))).collect()[0][0]
@@ -97,10 +123,10 @@ def label_propagation(
         if node_weight_col
         else F.lit(1.0)
     )
-    state0 = nodes.select(
-        "vid", init_label.alias("label"), node_weight.alias("nw"), F.lit(True).alias("changed")
-    )
+    return nodes.select("vid", init_label.alias("label"), node_weight.alias("nw"))
 
+
+def _sync_step(edges: DataFrame) -> Callable[[DataFrame, int], DataFrame]:
     win = Window.partitionBy("voter").orderBy(F.desc("votes"), F.asc("vote_label"))
     edges_renamed = edges.select(
         F.col("src").alias("voter"), F.col("dst").alias("nbr_vid"), "weight"
@@ -130,69 +156,26 @@ def label_propagation(
             (new_label != F.col("label")).alias("changed"),
         )
 
-    eng = engine or PregelEngine(spark)
-    result = eng.run(
-        initial_state=state0,
-        step=step,
-        stats_exprs=[F.sum(F.col("changed").cast("long")).alias("changed_count")],
-        converged=lambda st: (st["changed_count"] or 0) == 0,
-        max_iterations=max_iterations,
-        resume=resume,
-    )
-    edges.unpersist()
-    return LpaResult(
-        labels=result.state.select("vid", "label"),
-        ran_iterations=result.ran_iterations,
-        did_converge=result.did_converge,
-        metrics=result.metrics,
-    )
+    return step
 
 
-def _label_propagation_block_async(
-    graph: Graph,
-    max_iterations: int,
-    seed_col: str | None,
-    node_weight_col: str | None,
-    blocks: int,
-) -> LpaResult:
+def _block_async_step(edges: DataFrame, blocks: int) -> Callable[[DataFrame, int], DataFrame]:
     """Async-within-block, sync-across-blocks LPA (see label_propagation).
 
-    Per iteration:
-      1. block id = pmod(xxhash64(vid, iteration), blocks) — the salt
-         reshuffles block membership so no node pair stays cross-block
-         forever;
+    Per superstep s:
+      1. block id = pmod(xxhash64(vid, s), blocks) — the salt reshuffles
+         block membership so no node pair stays cross-block forever;
       2. every edge (voter, nbr, w*nw(nbr)) is tagged with the voter's
          block and the nbr's CURRENT label, then cogrouped with the
          block's node slice;
       3. a vectorized pandas kernel per block replays the reference's
          in-place loop (ascending vid; votes over current labels, where
          same-block neighbors reflect this pass's updates).
-    Shuffle per iteration = one edge join + one cogroup — same order as
+    Shuffle per superstep = one edge join + one cogroup — same order as
     the sync variant; the kernel is O(block edges) python-side but
     numpy/dict-based over Arrow batches (no per-row Python UDF calls).
     """
     import pandas as pd
-
-    spark = graph.edges.sparkSession
-    nodes = graph.nodes
-    if seed_col is not None:
-        max_seed = nodes.agg(F.max(F.col(seed_col))).collect()[0][0]
-        max_seed = -1 if max_seed is None else max_seed
-        init_label = F.coalesce(
-            F.col(seed_col).cast("long"), F.col("vid") + F.lit(max_seed + 1)
-        )
-    else:
-        init_label = F.col("vid")
-    node_weight = (
-        F.coalesce(F.col(node_weight_col).cast("double"), F.lit(1.0))
-        if node_weight_col
-        else F.lit(1.0)
-    )
-    state = nodes.select("vid", init_label.alias("label"), node_weight.alias("nw"))
-    state = state.localCheckpoint(eager=True)
-    edges = graph.edges.select(
-        F.col("src").alias("voter"), F.col("dst").alias("nbr"), "weight"
-    ).persist()
 
     out_schema = "vid long, label long, nw double, changed int"
 
@@ -241,43 +224,29 @@ def _label_propagation_block_async(
             }
         )
 
-    ran = 0
-    did_converge = False
-    for it in range(max_iterations):
-        blk = F.pmod(F.xxhash64(F.col("vid"), F.lit(it)), F.lit(blocks))
-        st_b = state.withColumn("block", blk)
+    voters = edges.select(F.col("src").alias("voter"), F.col("dst").alias("nbr"), "weight")
+
+    def step(state: DataFrame, s: int) -> DataFrame:
+        def block(node: str) -> Column:
+            return F.pmod(F.xxhash64(F.col(node), F.lit(s)), F.lit(blocks))
+
+        state = state.select("vid", "label", "nw")
         nbr_labels = state.select(
             F.col("vid").alias("nbr"), F.col("label").alias("nbr_label"),
             F.col("nw").alias("nbr_nw"),
         )
-        ed_b = (
-            edges.join(nbr_labels, "nbr")
-            .select(
-                F.pmod(F.xxhash64(F.col("voter"), F.lit(it)), F.lit(blocks)).alias("block"),
-                "voter", "nbr",
-                (F.col("weight") * F.col("nbr_nw")).alias("w"),
-                "nbr_label",
-            )
+        ed_b = voters.join(nbr_labels, "nbr").select(
+            block("voter").alias("block"), "voter", "nbr",
+            (F.col("weight") * F.col("nbr_nw")).alias("w"), "nbr_label",
         )
-        new_state = (
-            st_b.groupBy("block")
+        return (
+            state.withColumn("block", block("vid"))
+            .groupBy("block")
             .cogroup(ed_b.groupBy("block"))
             .applyInPandas(block_kernel, schema=out_schema)
-            .localCheckpoint(eager=True)
         )
-        n_changed = new_state.agg(F.sum("changed")).collect()[0][0] or 0
-        state = new_state.select("vid", "label", "nw")
-        ran = it + 1
-        if n_changed == 0:
-            did_converge = True
-            break
-    edges.unpersist()
-    return LpaResult(
-        labels=state.select("vid", "label"),
-        ran_iterations=ran,
-        did_converge=did_converge,
-        metrics=[],
-    )
+
+    return step
 
 
 def _label_propagation_async_serial(

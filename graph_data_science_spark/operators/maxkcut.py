@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.k1coloring import color_edges
+from graph_data_science_spark.operators.pregel import loop_conf
 from graph_data_science_spark.plans.graph import Graph
 from graph_data_science_spark.plans.lineage import cut_lineage
 
@@ -51,9 +52,7 @@ def approx_max_k_cut(
     engine-portable, so the graph_maxkcut DuckDB oracle replays the
     color-class sweep rounds exactly."""
     spark = graph.edges.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with loop_conf(spark):
         from graph_data_science_spark.operators.louvain import _canonical_edges
 
         e = _canonical_edges(graph).filter(F.col("src") != F.col("dst"))
@@ -92,7 +91,7 @@ def approx_max_k_cut(
                 # candidate rows for ALL k sets (absent set -> w_in 0)
                 sets_df = spark.range(k).select(F.col("id").alias("c"))
                 cand = (
-                    movers.crossJoin(sets_df)
+                    movers.crossJoin(F.broadcast(sets_df))
                     .join(w_in, ["vid", "c"], "left")
                     .select("vid", "c", F.coalesce("w_in", F.lit(0.0)).alias("w_in"))
                 )
@@ -124,5 +123,3 @@ def approx_max_k_cut(
         both.unpersist()
         colors.unpersist()
         return MaxKCutResult(assignments=assign, cut_cost=float(cut), ran_iterations=ran)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

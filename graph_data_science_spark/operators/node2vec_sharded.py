@@ -10,9 +10,9 @@ Design (everything O(n) lives in row-partitioned DataFrames):
 
 - **Model shard**: one frame (row, cvec, xvec) hash-partitioned on row
   — center and context vectors co-located per node. Updated per round
-  by a co-partitioned join; lineage cut per round (plans/lineage), AQE
-  off for the loop so the preserved partitioning survives (the engine's
-  standing Catalyst rules).
+  by a co-partitioned join; lineage cut per round (plans/lineage); the
+  loop runs under `pregel.loop_conf` (AQE and auto-broadcast off), so
+  the preserved partitioning survives.
 - **Negative sampling**: the classic word2vec unigram^0.75 table,
   built DISTRIBUTED — per-row slot counts proportional to freq^0.75
   (floor(w*T/W), min 1), laid out by a distributed exclusive prefix sum
@@ -53,6 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.pregel import loop_conf
 from graph_data_science_spark.plans.lineage import cut_lineage
 
 _EPS = 1e-10
@@ -162,13 +163,9 @@ def sgns_train_sharded(
     )
     shard = _init_shard(spark, n, dim, random_seed, p)
 
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-
     alpha_step = (initial_learning_rate - min_learning_rate) / max(iterations, 1)
     losses: list[float] = []
-    try:
+    with loop_conf(spark):
         for it in range(iterations):
             lr = float(
                 max(min_learning_rate, initial_learning_rate - it * alpha_step)
@@ -387,8 +384,6 @@ def sgns_train_sharded(
                 )
                 shard = cut_lineage(new_shard)
             losses.append(it_loss)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
     table.unpersist()
     emb = shard.select(
         "row", F.col("cvec").cast("array<float>").alias("embedding")

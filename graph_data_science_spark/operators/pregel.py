@@ -179,7 +179,11 @@ class PregelEngine:
 # exchange at all. Measured on perfbench pr_hub_durable (958,748 edges,
 # 20 supersteps, local[4]): 48 -> 23 jobs, driver gap 8.9 -> 5.1 s,
 # driver old-gen peak 1312 -> 634 MB, solve_s median 32.6 -> 25.2 s.
-# Explicit F.broadcast hints still apply.
+# Explicit F.broadcast hints still apply. Every iterative loop in the
+# package (the engine, louvain, leiden, maxkcut, sharded node2vec) runs
+# under this policy; two more failures it avoids, measured in louvain:
+# a broadcast scheduled inside a materializing job can deadlock a straggler;
+# AQE's sizeInBytes re-estimation across a join chain blows up in BigInteger.
 LOOP_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": "-1",

@@ -143,20 +143,13 @@ def test_louvain_modularity_on_random(spark):
     assert res.communities.count() == 300
 
 
-def test_louvain_restores_conf_when_a_level_raises(spark, monkeypatch):
-    def boom(*args, **kwargs):
-        raise RuntimeError("level failed")
-
-    monkeypatch.setattr(louvain_mod, "_local_move", boom)
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    saved = {k: spark.conf.get(k) for k in keys}
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1234567")
-    try:
-        with pytest.raises(RuntimeError, match="level failed"):
-            louvain(_graph(spark, weighted=False))
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1234567"
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+def test_modularity_optimization_releases_caches_without_edges(spark):
+    # nodes but no edges: the m <= 0 early return still unpersists its caches
+    nodes = spark.createDataFrame([(i,) for i in range(4)], "vid long")
+    edges = spark.createDataFrame([], "src long, dst long, weight double")
+    g = Graph.from_edges(edges, nodes=nodes)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    res = louvain_mod.modularity_optimization(g)
+    assert res.ran_iterations == 0 and res.modularity == 0.0
+    assert set(persistent().keys()) - before == set()

@@ -114,15 +114,44 @@ def test_lpa_block_async_matches_reference_fixture(spark):
     g = Graph.from_edges(spark.createDataFrame(rows, "src long, dst long, weight double"))
     # blocks=1 degenerates to the exact async_serial schedule (one block,
     # ascending vid, in-place) -> bit-identical labels
-    ba1 = label_propagation(g, max_iterations=20, mode="block_async", blocks=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("lpa-block-async", "block_async job count")
+    try:
+        ba1 = label_propagation(g, max_iterations=20, mode="block_async", blocks=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     ser = label_propagation(g, max_iterations=20, mode="async_serial")
     assert ba1.did_converge and ser.did_converge
+    # one engine superstep per job and per metrics record; the converging
+    # superstep is not counted
+    assert len(ba1.metrics) == ba1.ran_iterations + 1
+    assert len(sc.statusTracker().getJobIdsForGroup("lpa-block-async")) == len(ba1.metrics)
     la = {r["vid"]: r["label"] for r in ba1.labels.collect()}
     ls = {r["vid"]: r["label"] for r in ser.labels.collect()}
     assert la == ls
     # multi-block schedule converges too (possibly to another fixed point)
     ba3 = label_propagation(g, max_iterations=20, mode="block_async", blocks=3)
     assert ba3.did_converge
+
+
+def test_lpa_block_async_honours_engine_and_resume(spark, tmp_ckpt):
+    import os
+
+    from graph_data_science_spark.operators.pregel import PregelEngine
+    from graph_data_science_spark.sources.generator import random_graph
+
+    g = random_graph(spark, 40, 3, seed=5)
+    full = label_propagation(g, max_iterations=3, mode="block_async", blocks=4)
+    eng = PregelEngine(spark, checkpoint_dir=tmp_ckpt)
+    part = label_propagation(g, max_iterations=1, mode="block_async", blocks=4, engine=eng)
+    assert os.path.exists(os.path.join(tmp_ckpt, "metrics.jsonl"))
+    assert len(eng.manager.metrics()) == len(part.metrics) == 1
+    resumed = label_propagation(
+        g, max_iterations=3, mode="block_async", blocks=4,
+        engine=PregelEngine(spark, checkpoint_dir=tmp_ckpt), resume=True,
+    )
+    assert labels_dict(resumed) == labels_dict(full)
+    assert resumed.ran_iterations == full.ran_iterations
 
 
 def test_lpa_async_serial_scale_guard(spark):

@@ -12,12 +12,16 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators import leiden as leiden_mod
+from graph_data_science_spark.operators import louvain as louvain_mod
+from graph_data_science_spark.operators import maxkcut as maxkcut_mod
+from graph_data_science_spark.operators import node2vec_sharded
 from graph_data_science_spark.operators.hits import hits
 from graph_data_science_spark.operators.kcore import k_core_decomposition
 from graph_data_science_spark.operators.lpa import label_propagation
 from graph_data_science_spark.operators.pagerank import eigenvector, page_rank
 from graph_data_science_spark.operators.paths import bfs
-from graph_data_science_spark.operators.pregel import PregelEngine
+from graph_data_science_spark.operators.pregel import LOOP_CONF, PregelEngine
 from graph_data_science_spark.operators.wcc import wcc
 from graph_data_science_spark.plans.graph import Graph
 from graph_data_science_spark.sources.generator import random_graph
@@ -190,6 +194,54 @@ def test_loop_conf_restored_when_a_step_raises(spark):
         conf.set("spark.sql.autoBroadcastJoinThreshold", before["spark.sql.autoBroadcastJoinThreshold"])
 
 
+def _loops(spark) -> dict:
+    """name -> (module, first call of the loop body, run)."""
+    g = random_graph(spark, 50, 3, seed=3).to_undirected()
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "c_row long, x_row long")
+    freq = spark.createDataFrame([(0, 1), (1, 2), (2, 2), (3, 1)], "row long, cnt long")
+    return {
+        "louvain": (louvain_mod, "_local_move", lambda: louvain_mod.louvain(g)),
+        "modularity_optimization": (
+            louvain_mod, "_local_move", lambda: louvain_mod.modularity_optimization(g)),
+        "leiden": (leiden_mod, "_local_move", lambda: leiden_mod.leiden(g)),
+        "approx_max_k_cut": (maxkcut_mod, "color_edges", lambda: maxkcut_mod.approx_max_k_cut(g)),
+        "sgns_train_sharded": (
+            node2vec_sharded, "cut_lineage",
+            lambda: node2vec_sharded.sgns_train_sharded(spark, pairs, freq, n=4, dim=4)),
+    }
+
+
+@pytest.mark.parametrize("loop", ["approx_max_k_cut", "leiden", "louvain",
+                                  "modularity_optimization", "sgns_train_sharded"])
+def test_loop_conf_restored_when_a_loop_raises(spark, monkeypatch, loop):
+    module, name, run = _loops(spark)[loop]
+    real = getattr(module, name)
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in LOOP_CONF}
+    seen = {}
+
+    def first_loop_call(*args, **kwargs):
+        # sharded node2vec also cuts its pairs and model shard before the
+        # loop; the loop's first cut is the round's update (column `uc`)
+        if loop == "sgns_train_sharded" and "uc" not in args[0].columns:
+            return real(*args, **kwargs)
+        seen.update({k: conf.get(k) for k in LOOP_CONF})
+        raise RuntimeError("loop body failed")
+
+    monkeypatch.setattr(module, name, first_loop_call)
+    conf.set("spark.sql.adaptive.enabled", "true")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "1234567")
+    try:
+        with pytest.raises(RuntimeError, match="loop body failed"):
+            run()
+        assert seen == LOOP_CONF
+        assert conf.get("spark.sql.adaptive.enabled") == "true"
+        assert conf.get("spark.sql.autoBroadcastJoinThreshold") == "1234567"
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
 def _plan_tree(description: str) -> list[tuple[int, str]]:
     """(indent, node name) per line of a formatted physical plan's tree."""
     tree = description.split("\n\n")[0].splitlines()[1:]  # under "== Physical Plan =="
@@ -226,6 +278,7 @@ _OPS = {
     "page_rank": lambda g: page_rank(g, tolerance=0, max_iterations=3),
     "wcc": lambda g: wcc(g, max_iterations=3),
     "label_propagation": lambda g: label_propagation(g, max_iterations=3),
+    "lpa_block_async": lambda g: label_propagation(g, max_iterations=3, mode="block_async", blocks=4),
     "k_core_decomposition": lambda g: k_core_decomposition(g, max_iterations=3),
     "hits": lambda g: hits(g, hits_iterations=3, tolerance=0),
     "eigenvector": lambda g: eigenvector(g, max_iterations=3, tolerance=0),
