@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
+from graph_data_science_spark.plans.lineage import cut_lineage
 
 
 @dataclass
@@ -50,14 +51,9 @@ def hits(
         F.lit(float("inf")).alias("delta"),
     )
 
-    # The two in-step norm aggregates force a materialization each; cut
-    # the logical plan there too (cut_lineage) — the step references
-    # `state` three times through joins, so without an in-step cut the
-    # plan grows 3^k between the engine's checkpoint_interval
-    # truncations (measured ~6 s/superstep of driver analysis on a
-    # 1600-node graph; bounded plans run the same superstep in ~1 s).
-    from graph_data_science_spark.plans.lineage import cut_lineage
-
+    # Each norm's `collect` materializes the join under it; cut_lineage
+    # keeps that result, so the next norm and the engine's job read it
+    # instead of recomputing it.
     def step(state: DataFrame, s: int) -> DataFrame:
         hubs = state.select(F.col("vid").alias("src"), F.col("hub").alias("h"))
         auth_raw = (

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from graph_data_science_spark.operators.pregel import PregelEngine, PregelResult, cache_on
 from graph_data_science_spark.operators.scaling import apply_scaler
 from graph_data_science_spark.plans.graph import Graph
+from graph_data_science_spark.plans.lineage import cut_lineage
 
 
 @dataclass
@@ -261,7 +262,6 @@ def eigenvector(
         F.lit(float("inf")).alias("delta"),
     )
     edges = edges_by_source(graph)
-    from graph_data_science_spark.plans.lineage import cut_lineage
 
     def step(state: DataFrame, s: int) -> DataFrame:
         msgs = sql_messages(edges, state.select("vid", F.col("rank").alias("contrib")), weighted)
@@ -277,10 +277,9 @@ def eigenvector(
         # subquery would avoid the round-trip but deadlocks when the
         # engine materializes the persisted state — BroadcastExchange
         # inside an InMemoryRelation build; the collect is cheap and the
-        # reference does masterCompute on the driver too.) cut_lineage
-        # instead of persist: the norm aggregate forces a materialization
-        # anyway, and the cut keeps the plan from growing 2^k between the
-        # engine's checkpoint truncations (the HITS lesson).
+        # reference does masterCompute on the driver too.) The norm's
+        # `collect` materializes `raw`; cut_lineage keeps it, so the
+        # engine's job reads it instead of recomputing it.
         raw = cut_lineage(raw)
         norm = raw.agg(
             F.sqrt(F.sum(F.col("new_raw") * F.col("new_raw")))

@@ -14,8 +14,9 @@ bits. On Spark there is no shared memory across executors, so:
                              checkpointed parquet scan
   - masterCompute         -> driver code between supersteps (the
                              `converged` callback over per-superstep stats)
-  - iteration memory      -> one eager localCheckpoint per superstep cuts
-                             the lineage; a durable parquet/Iceberg snapshot
+  - iteration memory      -> one eager cut_lineage per superstep cuts
+                             the lineage and resets Catalyst's size
+                             estimate; a durable parquet/Iceberg snapshot
                              replaces it every `checkpoint_interval`
                              supersteps for resume (our addition; reference
                              is in-memory only)
@@ -26,13 +27,15 @@ The engine is algorithm-agnostic: an algorithm provides
   converged(stats)       -> bool, the masterCompute hook
 
 Every superstep is exactly ONE Spark job: the stats ride the action that
-materializes the new state (`observe` on the localCheckpoint or on the
-snapshot write), so convergence is checked after every superstep at no
-extra job. `loop_conf` holds the run's plan policy: AQE off and
+materializes the new state (`observe` on the cut_lineage checkpoint or
+on the snapshot write), so convergence is checked after every superstep
+at no extra job. `loop_conf` holds the run's plan policy: AQE off and
 auto-broadcast joins off, so each step's gather join is a sort-merge
 join between the cached edge table and the checkpointed state, both
 already hash-partitioned and sorted on the join key — no Exchange on
-either side and no broadcast job.
+either side and no broadcast job. The engine owns the lineage policy
+(plans/lineage.py): a step never cuts for lineage, however often it
+references its state.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from graph_data_science_spark.plans.lineage import cut_lineage, release
 from graph_data_science_spark.streaming.checkpoint import CheckpointManager
 
 
@@ -91,7 +95,7 @@ class PregelEngine:
         (the masterCompute position).
 
         Each superstep runs one job: `step(...).observe(stats)` is either
-        localCheckpointed (eager) or, on snapshot supersteps, written by
+        cut with cut_lineage (eager) or, on snapshot supersteps, written by
         the CheckpointManager; the observation fills from that one action.
         A run that converges between snapshots writes one final snapshot
         from the checkpointed state. Each superstep appends one metrics
@@ -114,7 +118,7 @@ class PregelEngine:
         if state is None:
             raise ValueError("no initial state and nothing to resume from")
 
-        local_cut: DataFrame | None = None  # this run's previous localCheckpoint
+        local_cut: DataFrame | None = None  # this run's previous in-memory cut
         did_converge = False
         ran = start_superstep
         t0 = time.time()
@@ -137,7 +141,7 @@ class PregelEngine:
                     stats["checkpointed"] = True
                     new_state = self.manager.save(new_state, s, extra=observed)
                 else:
-                    new_state = new_state.localCheckpoint(eager=True)
+                    new_state = cut_lineage(new_state)
                     observed()
                 t0 = time.time()
                 is_converged = converged(stats)
@@ -145,13 +149,13 @@ class PregelEngine:
                 ran = s if is_converged else s + 1
 
                 if local_cut is not None:
-                    _release(local_cut)  # its successor is materialized
+                    release(local_cut)  # its successor is materialized
                 local_cut = None if snapshot else new_state
                 if is_converged and self.manager is not None and not snapshot:
                     # converged between snapshots: persist the final state too
                     stats["checkpointed"] = True
                     new_state = self.manager.save(new_state, s, extra={"stats": stats})
-                    _release(local_cut)
+                    release(local_cut)
                 if self.manager is not None:
                     self.manager.log_metrics(stats)
                 metrics.append(stats)
@@ -215,14 +219,6 @@ def cache_on(df: DataFrame, key: str) -> DataFrame:
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     with loop_conf(df.sparkSession):
         return df.repartition(n_part, key).sortWithinPartitions(key).persist()
-
-
-def _release(df: DataFrame) -> None:
-    """Drop the cached blocks behind a localCheckpointed DataFrame.
-    SparkContext.unpersistRDD, not RDD.unpersist: the latter logs a
-    warning per call for every locally checkpointed RDD."""
-    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
-    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def _plain(d: dict[str, Any]) -> dict[str, Any]:

@@ -16,16 +16,19 @@ folded over the cumulative memory counts — same distribution family,
 deterministic and partition-invariant. Memory is an array<struct<label,
 cnt>> column bounded by the iteration count; speaking and the
 most-frequent-heard reduction are pure Column expressions + one
-shuffle per iteration.
+shuffle per iteration, run as PregelEngine supersteps.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.influence import _md5_u32
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 
@@ -33,6 +36,7 @@ from graph_data_science_spark.plans.graph import Graph
 class SllpaResult:
     communities: DataFrame  # (vid, community_ids: array<long>)
     ran_iterations: int
+    metrics: list[dict[str, Any]] = field(default_factory=list)
 
 
 def _spoken_label(mem, h):
@@ -67,17 +71,12 @@ def sllpa(
     coin family (operators/influence._md5_u32) — the graph_sllpa DuckDB
     oracle replays the identical per-iteration memory evolution."""
     spark = graph.edges.sparkSession
-    edges = graph.edges.select(
-        F.col("src").alias("speaker"), F.col("dst").alias("listener")
-    ).persist()
-    nodes = graph.nodes.select("vid")
+    edges = cache_on(graph.edges.selectExpr("src AS speaker", "dst AS listener"), "speaker")
     mem0 = F.array(F.struct(F.col("vid").alias("label"), F.lit(1).cast("long").alias("cnt")))
-    state = nodes.select("vid", mem0.alias("mem")).localCheckpoint(eager=True)
+    state0 = graph.nodes.select("vid", mem0.alias("mem"))
 
-    for it in range(max_iterations):
+    def step(state: DataFrame, it: int) -> DataFrame:
         if coin == "md5":
-            from graph_data_science_spark.operators.influence import _md5_u32
-
             h = _md5_u32(F.lit("sl"), F.lit(str(seed)), F.lit(str(it)), F.col("vid"))
         else:
             h = F.xxhash64(F.lit(seed), F.lit(it), F.col("vid"))
@@ -94,7 +93,6 @@ def sllpa(
             .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("m"))
             .select("vid", (-F.col("m.neg")).alias("new_lbl"))
         )
-        joined = state.join(best, "vid", "left")
         # add new_lbl to memory: bump its count or append
         has = F.exists("mem", lambda e: e["label"] == F.col("new_lbl"))
         bumped = F.transform(
@@ -113,10 +111,19 @@ def sllpa(
             .when(has, bumped)
             .otherwise(appended)
         )
-        state = joined.select("vid", new_mem.alias("mem")).localCheckpoint(eager=True)
+        return state.join(best, "vid", "left").select("vid", new_mem.alias("mem"))
+
+    result = PregelEngine(spark).run(  # the reference runs all maxIterations
+        initial_state=state0,
+        step=step,
+        stats_exprs=[F.max(F.size("mem")).alias("max_memory_labels")],
+        converged=lambda st: False,
+        max_iterations=max_iterations,
+    )
+    edges.unpersist()
 
     total = F.aggregate("mem", F.lit(0).cast("long"), lambda a, e: a + e["cnt"])
-    comm = state.select(
+    comm = result.state.select(
         "vid",
         F.array_sort(
             F.transform(
@@ -129,5 +136,4 @@ def sllpa(
             )
         ).alias("community_ids"),
     )
-    edges.unpersist()
-    return SllpaResult(communities=comm, ran_iterations=max_iterations)
+    return SllpaResult(comm, result.ran_iterations, result.metrics)

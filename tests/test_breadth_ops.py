@@ -57,6 +57,8 @@ def test_sllpa_two_cliques(spark):
                     rows.append((base + i, base + j, 1.0))
     g = Graph.from_edges(spark.createDataFrame(rows, "src long, dst long, weight double"))
     res = sllpa(g, max_iterations=20, min_association_strength=0.3)
+    assert res.ran_iterations == 20
+    assert [m["superstep"] for m in res.metrics] == list(range(20))
     comm = {r["vid"]: set(r["community_ids"]) for r in res.communities.collect()}
     dom1 = set.intersection(*[comm[i] for i in range(5)])
     dom2 = set.intersection(*[comm[i] for i in range(5, 10)])

@@ -108,6 +108,38 @@ def test_in_memory_superstep_is_one_job(spark):
     assert res.state.agg(F.max("x")).collect()[0][0] == k
 
 
+def _size_within_default(df) -> bool:
+    """df's optimized-plan sizeInBytes <= spark.sql.defaultSizeInBytes.
+    The JVM renders the size as decimal text: py4j would convert the
+    BigInt to a Python int, and Python refuses ints over 4300 digits."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    size = stats.productIterator().take(1).mkString()  # sizeInBytes
+    default = str(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
+    return (len(size), size) <= (len(default), default)
+
+
+def test_state_size_estimate_does_not_compound(spark):
+    # the step references its state twice, as LPA's does: an estimate
+    # kept across supersteps would square every superstep
+    state0 = spark.range(100).select(F.col("id").alias("vid"), F.lit(0).alias("x"))
+    res = PregelEngine(spark).run(
+        initial_state=state0,
+        step=lambda st, s: st.join(st.select("vid", F.col("x").alias("y")), "vid").select(
+            "vid", (F.col("x") + F.col("y") + 1).alias("x")
+        ),
+        stats_exprs=[F.max("x").alias("max_x")],
+        converged=lambda st: False,
+        max_iterations=12,
+    )
+    assert _size_within_default(res.state)
+    assert res.metrics[-1]["max_x"] == 2 ** 12 - 1
+
+
+def test_lpa_labels_size_estimate_does_not_compound(spark):
+    g = random_graph(spark, 300, 4, seed=3)
+    assert _size_within_default(label_propagation(g, max_iterations=12).labels)
+
+
 def test_ran_iterations_exact_between_intervals(spark):
     # BFS down an 8-node chain: superstep s reaches node s + 1, superstep 7
     # changes nothing, so the reference counts 7 iterations
@@ -277,6 +309,7 @@ def _edge_join_inputs(description: str) -> list[list[str]]:
 _OPS = {
     "page_rank": lambda g: page_rank(g, tolerance=0, max_iterations=3),
     "wcc": lambda g: wcc(g, max_iterations=3),
+    "wcc_star": lambda g: wcc(g, max_iterations=3, star_contraction=True),
     "label_propagation": lambda g: label_propagation(g, max_iterations=3),
     "lpa_block_async": lambda g: label_propagation(g, max_iterations=3, mode="block_async", blocks=4),
     "k_core_decomposition": lambda g: k_core_decomposition(g, max_iterations=3),

@@ -3,12 +3,11 @@
 Builds the sql-backend superstep from the functions page_rank itself
 calls (edges_by_source, sql_messages) under the engine's loop conf
 (pregel.loop_conf), runs one superstep, then plans the next one from
-three kinds of state: the engine's eager localCheckpoint, a lazy
-localCheckpoint, and cut_lineage. For each it counts hash Exchanges and
-BroadcastExchanges, so we can see whether the state side of
-`senders join edges` and `state join msgs` re-shuffles (i.e. whether
-HashPartitioning survives the lineage cut) and whether anything is
-broadcast. It prints the plan of the first.
+two kinds of state: the engine's cut_lineage and a lazy localCheckpoint.
+For each it counts hash Exchanges and BroadcastExchanges, so we can see
+whether the state side of `senders join edges` and `state join msgs`
+re-shuffles (i.e. whether HashPartitioning survives the lineage cut) and
+whether anything is broadcast. It prints the plan of the first.
 
     python tools/probe_exchanges.py
 """
@@ -69,11 +68,10 @@ def main():
         (F.col("degree") > 0).alias("will_send"),
     )
     with loop_conf(spark):
-        s1 = step(edges, state0).localCheckpoint(eager=True)
+        s1 = cut_lineage(step(edges, state0))
         states = [
-            ("localCheckpoint (the engine's)", s1),
+            ("cut_lineage (the engine's)", s1),
             ("lazy localCheckpoint", step(edges, s1).localCheckpoint(eager=False)),
-            ("cut_lineage", cut_lineage(step(edges, s1))),
         ]
         for i, (name, state) in enumerate(states):
             shuffles, broadcasts, plan = count_exchanges(step(edges, state))
