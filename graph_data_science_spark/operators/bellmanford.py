@@ -15,8 +15,8 @@ BSP min-relaxation fixpoint as dijkstra, with the state extended by the
 hop LENGTH of the tentative path. Negative weights need no change to
 the relaxation (label-correcting, not label-setting); the length bound
 is the cycle detector. Cycle paths are reconstructed with the same
-join-based backward walk as dijkstra's paths, stopping when the walk
-revisits its seed.
+engine walk over parent pointers as dijkstra's paths, stopping when the
+walk revisits its seed.
 
 Scale notes: worst-case rounds = n (vs diameter for Dijkstra) — that is
 Bellman-Ford's complexity, not a plan defect; each round touches only
@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.dijkstra import _reconstruct
+from graph_data_science_spark.operators.dijkstra import _reconstruct, _walk
 from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
@@ -160,49 +160,20 @@ def bellman_ford(
 
 
 def _negative_cycles(state: DataFrame, seeds: DataFrame, n: int) -> DataFrame:
-    """Walk predecessors from each overflowed seed until the seed closes
-    the cycle (BellmanFord.negativeCycleResult: walks longer than
-    nodeCount+1 are dropped). Join-based walk like dijkstra._reconstruct;
-    emitted node_ids run in cycle (forward) order, costs are the step
-    weights accumulated along the cycle."""
-    ptab = state.select(F.col("vid").alias("cur"), "parent").persist()
-    walk = (
-        seeds.select(F.col("vid").alias("seed"))
-        .join(ptab, F.col("seed") == F.col("cur"))
-        .select(
-            "seed",
-            F.col("parent").alias("cur_next"),
-            F.array(F.col("seed")).alias("nodes_rev"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    done = walk.filter(F.col("cur_next") == F.col("seed"))
-    active = walk.filter(F.col("cur_next") != F.col("seed"))
-    for _ in range(n + 1):
-        if active.rdd.isEmpty():
-            break
-        stepped = (
-            active.join(ptab, active["cur_next"] == ptab["cur"])
-            .select(
-                "seed",
-                F.col("parent").alias("cur_next"),
-                F.concat("nodes_rev", F.array(F.col("cur"))).alias("nodes_rev"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        done = done.unionByName(
-            stepped.filter(F.col("cur_next") == F.col("seed"))
-        ).localCheckpoint(eager=True)
-        active = stepped.filter(F.col("cur_next") != F.col("seed"))
-    ptab.unpersist()
+    """Walk predecessors from each overflowed seed until the walk returns
+    to its seed and closes the cycle (BellmanFord.negativeCycleResult:
+    walks longer than nodeCount+1 are dropped, and so is a seed on a tail
+    whose walk never returns). The same engine walk as
+    dijkstra._reconstruct's, one parent hop and one job per round, never
+    squared; emitted node_ids run in cycle (forward) order."""
+    done = _walk(state, seeds, F.col("cur_next") == F.col("start"), n + 1, square=False)
     # forward cycle order: seed -> ... -> seed closes; reverse the
     # predecessor chain and close the loop at the seed
     cycles = done.select(
-        "seed",
-        F.concat(F.array(F.col("seed")), F.reverse(F.slice("nodes_rev", 2, n + 2)))
-        .alias("mid"),
-    ).select(
-        "seed", F.concat(F.col("mid"), F.array(F.col("seed"))).alias("node_ids")
+        F.col("start").alias("seed"),
+        F.concat(
+            F.array("start"), F.reverse(F.slice("node_ids_rev", 2, n + 2)), F.array("start")
+        ).alias("node_ids"),
     )
     from graph_data_science_spark.plans.ranking import distributed_row_index
 

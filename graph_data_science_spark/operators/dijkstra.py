@@ -15,26 +15,29 @@ weights), extended with PARENT tracking: each message carries its sender,
 and the min-combine picks (cost, parent) lexicographically — the smallest
 parent id among optimal predecessors, making the shortest-path TREE
 deterministic and partition-invariant. Path reconstruction then walks the
-parent pointers backward entirely with joins — one hash join per round
-on the shrinking active set, no driver-side row data. At 10^9 nodes the
-parent table is a hash-partitioned DataFrame and each round touches only
-still-walking targets. Shallow walks run the linear one-hop-per-round
-mode; deep walks (> _DOUBLING_THRESHOLD hops) switch to POINTER
-DOUBLING (parent(2k) = parent(parent(k)) with array splicing), so the
-round count is O(log diameter) — see _reconstruct for the memory
-trade-off.
+parent pointers backward as one PregelEngine step (_walk) — one join per
+superstep between the still-walking targets and a jump table cached
+hash-partitioned on its node, no driver-side row data. The linear walk
+is the jump table never squared: one parent hop and one job per
+superstep. Deep walks (> _DOUBLING_THRESHOLD hops) square it every round
+(POINTER DOUBLING: parent(2k) = parent(parent(k)) with array splicing),
+so the round count is O(log diameter) at two jobs per round — see
+_reconstruct for the memory trade-off. Bellman-Ford's negative-cycle
+walk is the same step with a different finish predicate.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
+from graph_data_science_spark.plans.lineage import cut_lineage, release
 
 _INF = float("inf")
 
@@ -111,6 +114,92 @@ def _parent_fixpoint(
 _DOUBLING_THRESHOLD = 16  # walks deeper than this use pointer doubling
 
 
+def _walk(
+    parents: DataFrame,  # (vid, dist, parent)
+    starts: DataFrame,  # (vid)
+    finished: Column,
+    max_rounds: int,
+    square: bool,
+) -> DataFrame:
+    """Walk parent pointers from every start until `finished` holds, as
+    one step on an in-memory PregelEngine. The jump table holds, per
+    FINITE-distance node `cur`, the node `nxt` some hops up its parent
+    chain and the segment of nodes and distances walked to reach it; it
+    starts one hop deep (nxt = parent) and, with `square`, is squared at
+    the top of every round after the first, so round k advances 2^(k-1)
+    hops. Unsquared, it is the one-hop linear walk. Returns (start,
+    cur_next, node_ids_rev, costs_rev) for the walks that finished within
+    max_rounds; arrays run from the start up the parent chain.
+
+    Superstep 0 materializes the first hop; each later superstep passes
+    the finished walks through and joins the rest to the table on
+    cur_next. One job per superstep, plus the cut of each squared table."""
+    jump0 = cache_on(
+        parents.filter(F.col("dist") < _INF).select(
+            F.col("vid").alias("cur"),
+            F.col("parent").alias("nxt"),
+            F.array("vid").alias("seg_nodes"),
+            F.array("dist").alias("seg_costs"),
+        ),
+        "cur",
+    )
+    table = jump0
+    walks0 = starts.join(jump0, F.col("vid") == F.col("cur")).select(
+        F.col("vid").alias("start"),
+        F.col("nxt").alias("cur_next"),
+        F.col("seg_nodes").alias("node_ids_rev"),
+        F.col("seg_costs").alias("costs_rev"),
+    )
+
+    def step(walks: DataFrame, s: int) -> DataFrame:
+        nonlocal table
+        if s == 0:
+            return walks
+        if square and s >= 2:
+            # 2^k -> 2^(k+1) hops per row, squared only for a round that runs
+            a, b = table.alias("a"), table.alias("b")
+            ends = F.col("a.nxt").isNull()
+            squared = cut_lineage(
+                a.join(b, F.col("a.nxt") == F.col("b.cur"), "left")
+                .select(
+                    F.col("a.cur").alias("cur"),
+                    F.col("b.nxt").alias("nxt"),
+                    F.when(ends, F.col("a.seg_nodes"))
+                    .otherwise(F.concat("a.seg_nodes", "b.seg_nodes")).alias("seg_nodes"),
+                    F.when(ends, F.col("a.seg_costs"))
+                    .otherwise(F.concat("a.seg_costs", "b.seg_costs")).alias("seg_costs"),
+                )
+                .repartition("cur")
+                .sortWithinPartitions("cur")
+            )
+            if table is not jump0:
+                release(table)
+            table = squared
+        moved = (
+            walks.filter(~finished)
+            .join(table, F.col("cur_next") == F.col("cur"))
+            .select(
+                "start",
+                F.col("nxt").alias("cur_next"),
+                F.concat("node_ids_rev", "seg_nodes").alias("node_ids_rev"),
+                F.concat("costs_rev", "seg_costs").alias("costs_rev"),
+            )
+        )
+        return walks.filter(finished).unionByName(moved)
+
+    result = PregelEngine(parents.sparkSession).run(
+        initial_state=walks0,
+        step=step,
+        stats_exprs=[F.sum((~finished).cast("long")).alias("active")],
+        converged=lambda st: (st["active"] or 0) == 0,
+        max_iterations=max_rounds + 1,
+    )
+    jump0.unpersist()
+    if table is not jump0:
+        release(table)
+    return result.state.filter(finished)
+
+
 def _reconstruct(
     parents: DataFrame,  # (vid, dist, parent)
     source: int | None,
@@ -118,135 +207,45 @@ def _reconstruct(
     max_rounds: int,
     doubling: bool | None = None,
 ) -> DataFrame:
-    """Backward parent-pointer walk entirely with joins. Arrays build
-    from the target back to the source, then flip. source=None derives
-    each path's source from its own first node (multi-source trees,
-    e.g. dag.longestPath).
+    """Backward parent-pointer walk (_walk) from every target to the root
+    of its tree. Arrays build from the target back to the source, then
+    flip. source=None derives each path's source from its own first node
+    (multi-source trees, e.g. dag.longestPath).
 
-    Shallow walks (max_rounds <= _DOUBLING_THRESHOLD) step one parent
-    hop per round — O(depth) tiny joins on the shrinking active set.
-    Deep walks switch to POINTER DOUBLING: a jump table J_k holds, per
-    node, the 2^k-hop ancestor plus the node segment traversed to reach
-    it (parent(2k) = parent(parent(k)) with array splicing); each round
-    advances every active walk 2^k hops and squares J, so a diameter-D
-    chain finishes in O(log D) rounds instead of O(D). Cost: J carries
-    O(n * min(2^k, D)) segment entries — the same order as the walk
-    output itself when most nodes are targets (allShortestPaths), and
-    bounded by n*D in the worst case; the linear walk remains the
-    low-memory mode for shallow reconstructions. The jump table holds
-    only FINITE-distance rows (unreachable nodes can appear in no walk),
-    so a pruned search (astar) squares only the settled region.
+    Shallow walks (max_rounds <= _DOUBLING_THRESHOLD) run the jump table
+    unsquared: one parent hop per round, one job per hop. Deep walks use
+    POINTER DOUBLING: squaring the table (parent(2k) = parent(parent(k))
+    with array splicing) lets round k advance every active walk 2^(k-1)
+    hops, so a diameter-D chain finishes in O(log D) rounds of at most
+    two jobs (the square's cut and the step). On a chain, a 12-hop
+    linear walk runs 13 walk jobs and a 60-hop doubling walk 12; with
+    the path ranking, dijkstra runs 19 and 18 jobs after its fixpoint,
+    where the former hand-written loops ran about 4 per hop (57) and 39.
+    Cost: the squared table carries O(n *
+    min(2^k, D)) segment entries — the same order as the walk output
+    itself when most nodes are targets (allShortestPaths), and bounded
+    by n*D in the worst case; the linear walk remains the low-memory mode
+    for shallow reconstructions. The table holds only FINITE-distance
+    rows (unreachable nodes can appear in no walk), so a pruned search
+    (astar) squares only the settled region.
 
     doubling=None selects by max_rounds; callers that KNOW their walks
     are shallow regardless of the conservative max_rounds bound (steiner
     passes cumulative supersteps but each merge keeps chains short) pass
     doubling=False — the linear walk costs O(actual depth) rounds, not
-    O(max_rounds), because it exits when the active set drains."""
-    ptab = parents.select(
-        F.col("vid").alias("cur"), F.col("dist").alias("cur_dist"), "parent"
-    ).persist()
-    walk = (
-        targets.select(F.col("vid").alias("target"))
-        .join(ptab, F.col("target") == F.col("cur"))
-        .select(
-            "target",
-            F.col("cur_dist").alias("total_cost"),
-            F.col("parent").alias("cur_next"),
-            F.array(F.col("target")).alias("node_ids_rev"),
-            F.array(F.col("cur_dist")).alias("costs_rev"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    done = walk.filter(F.col("cur_next").isNull())
-    active = walk.filter(F.col("cur_next").isNotNull())
+    O(max_rounds), because it stops when no walk is active."""
     if doubling is None:
         doubling = max_rounds > _DOUBLING_THRESHOLD
-    if not doubling:
-        for _ in range(max_rounds + 1):
-            if active.rdd.isEmpty():
-                break
-            stepped = (
-                active.join(ptab, active["cur_next"] == ptab["cur"])
-                .select(
-                    "target",
-                    "total_cost",
-                    F.col("parent").alias("cur_next"),
-                    F.concat("node_ids_rev", F.array(F.col("cur"))).alias("node_ids_rev"),
-                    F.concat("costs_rev", F.array(F.col("cur_dist"))).alias("costs_rev"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            done = done.unionByName(stepped.filter(F.col("cur_next").isNull())).localCheckpoint(
-                eager=True
-            )
-            active = stepped.filter(F.col("cur_next").isNotNull())
-    else:
-        import math
-
-        jump = (
-            ptab.filter(F.col("cur_dist") < float("inf"))
-            .select(
-                "cur",
-                F.col("parent").alias("nxt"),
-                F.array(F.col("cur")).alias("seg_nodes"),
-                F.array(F.col("cur_dist")).alias("seg_costs"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        rounds = int(math.ceil(math.log2(max(max_rounds, 2)))) + 2
-        first_round = True
-        for _ in range(rounds):
-            if active.rdd.isEmpty():
-                break
-            if not first_round:
-                # square the jump table (2^k -> 2^(k+1) hops per row) at
-                # the TOP of a round we know will run — squaring after
-                # the step wasted one full self-join + eager checkpoint
-                # per reconstruction (the last square was never consumed)
-                # and materialized the widest O(n*2^k) table exactly when
-                # only a handful of walks remained active
-                a, b = jump.alias("a"), jump.alias("b")
-                jump = (
-                    a.join(b, F.col("a.nxt") == F.col("b.cur"), "left")
-                    .select(
-                        F.col("a.cur").alias("cur"),
-                        F.when(F.col("a.nxt").isNull(), F.lit(None).cast("long"))
-                        .otherwise(F.col("b.nxt")).alias("nxt"),
-                        F.when(F.col("a.nxt").isNull(), F.col("a.seg_nodes"))
-                        .otherwise(F.concat(F.col("a.seg_nodes"), F.col("b.seg_nodes")))
-                        .alias("seg_nodes"),
-                        F.when(F.col("a.nxt").isNull(), F.col("a.seg_costs"))
-                        .otherwise(F.concat(F.col("a.seg_costs"), F.col("b.seg_costs")))
-                        .alias("seg_costs"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            first_round = False
-            stepped = (
-                active.join(jump, active["cur_next"] == jump["cur"])
-                .select(
-                    "target",
-                    "total_cost",
-                    F.col("nxt").alias("cur_next"),
-                    F.concat("node_ids_rev", "seg_nodes").alias("node_ids_rev"),
-                    F.concat("costs_rev", "seg_costs").alias("seg_costs_tmp"),
-                )
-                .withColumnRenamed("seg_costs_tmp", "costs_rev")
-                .localCheckpoint(eager=True)
-            )
-            done = done.unionByName(stepped.filter(F.col("cur_next").isNull())).localCheckpoint(
-                eager=True
-            )
-            active = stepped.filter(F.col("cur_next").isNotNull())
-    ptab.unpersist()
+    rounds = int(math.ceil(math.log2(max(max_rounds, 2)))) + 2 if doubling else max_rounds + 1
+    done = _walk(parents, targets, F.col("cur_next").isNull(), rounds, square=doubling)
     src_col = (
         F.lit(source) if source is not None
         else F.element_at(F.reverse("node_ids_rev"), 1)
     )
     out = done.select(
         src_col.alias("source_node"),
-        F.col("target").alias("target_node"),
-        "total_cost",
+        F.col("start").alias("target_node"),
+        F.element_at("costs_rev", 1).alias("total_cost"),
         F.reverse("node_ids_rev").alias("node_ids"),
         F.reverse("costs_rev").alias("costs"),
     )

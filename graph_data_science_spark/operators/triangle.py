@@ -30,10 +30,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.graph import Graph, Orientation
+from graph_data_science_spark.plans.lineage import cut_lineage
 
 
 @dataclass
@@ -61,35 +62,33 @@ def _canonical_edges(graph: Graph) -> DataFrame:
     )
 
 
-def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
-    """Stream distinct triangles as rows (a, b, c) with a < b < c.
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(vid, d): degree over the canonical edges, parallel edges counted once."""
+    return (
+        edges.select(F.col("src").alias("vid"))
+        .unionByName(edges.select(F.col("dst").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
 
-    Mirrors gds.triangles (TriangleStream.java:52,96-148; reference emits
-    c<b<a — same set, fixed corner order)."""
-    edges = _canonical_edges(graph)
+
+def _triangles(edges: DataFrame, max_degree: int | None) -> DataFrame:
+    """Triangles (a, b, c), a < b < c, of canonical `edges`, each counted
+    once; nodes of degree > max_degree take part in none."""
     if max_degree is not None:
-        deg = edges.select(F.col("src").alias("v")).unionByName(
-            edges.select(F.col("dst").alias("v"))
-        ).groupBy("v").count()
-        keep = deg.filter(F.col("count") <= max_degree).select("v")
+        keep = _degrees(edges).filter(F.col("d") <= max_degree).select("vid")
         edges = (
-            edges.join(keep.withColumnRenamed("v", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi")
+            edges.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-    edges = edges.persist()
 
     # degree-ordered orientation: from lower (degree, id) to higher —
     # bounds wedge fan-out on skewed graphs; counts are unchanged
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(edges)
     e_ranked = (
-        edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("d", "ds"), "src")
-        .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("d", "dd"), "dst")
+        edges.join(deg.withColumnRenamed("vid", "src").withColumnRenamed("d", "ds"), "src")
+        .join(deg.withColumnRenamed("vid", "dst").withColumnRenamed("d", "dd"), "dst")
         .select(
             F.when(
                 (F.col("ds") < F.col("dd"))
@@ -120,35 +119,44 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     return out
 
 
+def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
+    """Stream distinct triangles as rows (a, b, c) with a < b < c.
+
+    Mirrors gds.triangles (TriangleStream.java:52,96-148; reference emits
+    c<b<a — same set, fixed corner order)."""
+    return _triangles(_canonical_edges(graph), max_degree)
+
+
 def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCountResult:
-    tris = triangles(graph, max_degree=max_degree).persist()
-    global_count = tris.count()
-    corners = tris.selectExpr("explode(array(a, b, c)) as vid").groupBy("vid").agg(
-        F.count(F.lit(1)).alias("t")
+    """per_node is materialized once (cut_lineage); the global count is
+    observed in the same job as sum(per-node counts) / 3."""
+    edges = _canonical_edges(graph).persist()
+    corners = (
+        _triangles(edges, max_degree)
+        .select(F.explode(F.array("a", "b", "c")).alias("vid"))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("t"))
     )
     per_node = graph.nodes.select("vid").join(corners, "vid", "left").select(
         "vid", F.coalesce("t", F.lit(0)).alias("triangles")
     )
     if max_degree is not None:
         # excluded nodes report -1 (IntersectingTriangleCount.java:139-143)
-        edges = _canonical_edges(graph)
-        deg = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count(F.lit(1)).alias("d"))
+        per_node = per_node.join(_degrees(edges), "vid", "left").select(
+            "vid",
+            F.when(F.coalesce("d", F.lit(0)) > max_degree, F.lit(-1))
+            .otherwise(F.col("triangles"))
+            .alias("triangles"),
         )
-        per_node = (
-            per_node.join(deg, "vid", "left")
-            .select(
-                "vid",
-                F.when(F.coalesce("d", F.lit(0)) > max_degree, F.lit(-1))
-                .otherwise(F.col("triangles"))
-                .alias("triangles"),
-            )
-        )
-    tris.unpersist()
-    return TriangleCountResult(per_node=per_node, global_count=global_count)
+    # observed at the plan's root: the optimizer drops an empty join side,
+    # and an observation inside it with it. Nodes reporting -1 are in no
+    # triangle, so the sum ignores them.
+    obs = Observation()
+    per_node = cut_lineage(
+        per_node.observe(obs, F.sum(F.greatest("triangles", F.lit(0))).alias("corners"))
+    )
+    edges.unpersist()
+    return TriangleCountResult(per_node=per_node, global_count=(obs.get["corners"] or 0) // 3)
 
 
 def local_clustering_coefficient(graph: Graph) -> DataFrame:
@@ -156,15 +164,8 @@ def local_clustering_coefficient(graph: Graph) -> DataFrame:
     (LocalClusteringCoefficient.java:125-135; degree without parallel
     edges)."""
     tc = triangle_count(graph)
-    edges = _canonical_edges(graph)
-    deg = (
-        edges.select(F.col("src").alias("vid"))
-        .unionByName(edges.select(F.col("dst").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     return (
-        tc.per_node.join(deg, "vid", "left")
+        tc.per_node.join(_degrees(_canonical_edges(graph)), "vid", "left")
         .select(
             "vid",
             F.when(

@@ -121,12 +121,15 @@ def test_bellman_ford_javatpoint_example(spark):
     assert len(got) == 6
 
 
-def test_bellman_ford_negative_cycle(spark):
+LOOP_EDGES = [(0, 1, 1.0), (0, 2, 10.0), (2, 3, -8.0), (3, 4, -4.0), (4, 2, 1.0)]
+
+
+@pytest.mark.parametrize("tail", [[], [(4, 5, 1.0)]], ids=["loop", "loop_with_tail"])
+def test_bellman_ford_negative_cycle(spark, tail):
     """BellmanFordTest.shouldTrackNegativeCycles:143-150 — loop graph
-    a2->a3->a4->a2 sums to -11."""
-    g = _bf_graph(spark, [
-        (0, 1, 1.0), (0, 2, 10.0), (2, 3, -8.0), (3, 4, -4.0), (4, 2, 1.0),
-    ])
+    a2->a3->a4->a2 sums to -11. With a tail edge 4->5, node 5 overflows
+    too, but its predecessor walk never returns to it: no cycle row."""
+    g = _bf_graph(spark, LOOP_EDGES + tail)
     res = bellman_ford(g, source=0)
     assert res.contains_negative_cycle
     assert res.paths.count() == 0  # shortest paths empty on cycle
@@ -134,7 +137,7 @@ def test_bellman_ford_negative_cycle(spark):
     assert len(cyc) >= 1
     for c in cyc:
         ids = list(c["node_ids"])
-        assert ids[0] == ids[-1]
+        assert ids[0] == ids[-1] == c["source_node"]
         assert set(ids) <= {2, 3, 4}
         assert c["total_cost"] == -11.0
 

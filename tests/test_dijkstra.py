@@ -103,3 +103,41 @@ def test_deep_chain_pointer_doubling(spark):
     assert list(rows[0]["node_ids"]) == list(range(n))
     assert list(rows[0]["costs"]) == [float(i) for i in range(n)]
     assert rows[0]["total_cost"] == float(n - 1)
+
+
+# _reconstruct's jobs beyond one per walk superstep: the path ranking's
+# two checkpoints and its offset collect, plus the caller's collect
+_WALK_OVERHEAD_JOBS = 6
+
+
+def test_linear_walk_is_one_job_per_hop(spark):
+    from graph_data_science_spark.operators.dijkstra import _reconstruct
+
+    hops = 12
+    parents = spark.createDataFrame(
+        [(v, float(v), v - 1 if v else None) for v in range(hops + 1)],
+        "vid long, dist double, parent long",
+    )
+    targets = spark.createDataFrame([(hops,)], "vid long")
+    sc = spark.sparkContext
+    sc.setJobGroup("linear-walk", "linear walk job count")
+    try:
+        rows = _reconstruct(parents, 0, targets, max_rounds=hops).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [list(r["node_ids"]) for r in rows] == [list(range(hops + 1))]
+    assert rows[0]["total_cost"] == float(hops)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("linear-walk"))
+    assert jobs <= hops + 1 + _WALK_OVERHEAD_JOBS
+
+
+def test_walk_leaves_a_durable_engine_to_the_fixpoint(spark, tmp_ckpt):
+    from graph_data_science_spark.operators.pregel import PregelEngine
+
+    g = _graph(spark, DIJ_EDGES, 6)
+    eng = PregelEngine(spark, checkpoint_dir=tmp_ckpt)
+    res = dijkstra(g, source=0, targets=[5], engine=eng)
+    assert res.paths.collect()[0]["node_ids"] == [0, 2, 4, 3, 5]
+    supersteps = [m["superstep"] for m in res.metrics]
+    assert [m["superstep"] for m in eng.manager.metrics()] == supersteps
+    assert eng.manager.latest_superstep() == supersteps[-1]

@@ -2,8 +2,10 @@
 algo/src/test/java/org/neo4j/gds/triangle/IntersectingTriangleCountTest.java."""
 
 import pytest
+from pyspark import StorageLevel
 
 from graph_data_science_spark.operators.triangle import (
+    _canonical_edges,
     average_clustering_coefficient,
     local_clustering_coefficient,
     triangle_count,
@@ -43,9 +45,12 @@ def test_clique5_with_parallel_edges(spark):
 
 
 def test_two_adjacent_triangles(spark):
-    res = triangle_count(adjacent_triangles_graph(spark))
+    g = adjacent_triangles_graph(spark)
+    res = triangle_count(g)
     assert res.global_count == 2
     assert per_node(res) == {0: 2, 1: 1, 2: 1, 3: 1, 4: 1}
+    # triangle_count releases the edge cache it made
+    assert _canonical_edges(g).storageLevel == StorageLevel.NONE
 
 
 def test_max_degree_filter(spark):
@@ -58,8 +63,10 @@ def test_max_degree_filter(spark):
 
 def test_triangle_stream_rows(spark):
     # TriangleStream.java:96-148 — each triangle exactly once, a < b < c
-    tris = sorted(tuple(r) for r in triangles(adjacent_triangles_graph(spark)).collect())
+    g = adjacent_triangles_graph(spark)
+    tris = sorted(tuple(r) for r in triangles(g).collect())
     assert tris == [(0, 1, 2), (0, 3, 4)]
+    assert _canonical_edges(g).storageLevel == StorageLevel.NONE  # nothing left cached
 
 
 def test_lcc_clique5(spark):
@@ -83,3 +90,18 @@ def test_directed_input_treated_undirected(spark):
     g = Graph.from_edges(edges)  # NATURAL orientation input
     res = triangle_count(g)
     assert res.global_count == 1
+
+
+def test_no_edges_under_aqe(spark):
+    # the optimizer drops an empty relation's subtree; the global count's
+    # observation must survive it (AQE on, as one-shot queries run)
+    edges = spark.createDataFrame([], "src long, dst long, weight double")
+    nodes = spark.createDataFrame([(0,), (1,)], "vid long")
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        res = triangle_count(Graph.from_edges(edges, nodes=nodes), max_degree=1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    assert res.global_count == 0
+    assert per_node(res) == {0: 0, 1: 0}
