@@ -18,8 +18,9 @@ initialLearningRate=0.025, minLearningRate=1e-4, iterations=1).
 Spark-first design (NOT the reference's shared-memory hogwild):
 
 - Walks: `sources/sampling.py:biased_random_walks` — the (p,q) bias and
-  roulette pick run inside array expressions, one adjacency join per
-  step, fully JVM-side.
+  roulette pick run inside array expressions, fully JVM-side, as the
+  sampler's pick in the shared walk step on an in-memory PregelEngine:
+  one adjacency join and one job per step.
 - Pair generation: explode + per-walk row_number (window partitioned by
   walk_id) + a range self-join on walk rank — all Catalyst operators,
   subsampling decided by deterministic xxhash64.

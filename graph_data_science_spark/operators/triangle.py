@@ -127,10 +127,9 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     return _triangles(_canonical_edges(graph), max_degree)
 
 
-def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCountResult:
-    """per_node is materialized once (cut_lineage); the global count is
-    observed in the same job as sum(per-node counts) / 3."""
-    edges = _canonical_edges(graph).persist()
+def _node_triangles(graph: Graph, edges: DataFrame, max_degree: int | None) -> DataFrame:
+    """(vid, triangles) over the canonical `edges`: per-node corner counts,
+    0 for nodes in no triangle, -1 for maxDegree-excluded nodes."""
     corners = (
         _triangles(edges, max_degree)
         .select(F.explode(F.array("a", "b", "c")).alias("vid"))
@@ -148,12 +147,21 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
             .otherwise(F.col("triangles"))
             .alias("triangles"),
         )
+    return per_node
+
+
+def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCountResult:
+    """per_node is materialized once (cut_lineage); the global count is
+    observed in the same job as sum(per-node counts) / 3."""
+    edges = _canonical_edges(graph).persist()
     # observed at the plan's root: the optimizer drops an empty join side,
     # and an observation inside it with it. Nodes reporting -1 are in no
     # triangle, so the sum ignores them.
     obs = Observation()
     per_node = cut_lineage(
-        per_node.observe(obs, F.sum(F.greatest("triangles", F.lit(0))).alias("corners"))
+        _node_triangles(graph, edges, max_degree).observe(
+            obs, F.sum(F.greatest("triangles", F.lit(0))).alias("corners")
+        )
     )
     edges.unpersist()
     return TriangleCountResult(per_node=per_node, global_count=(obs.get["corners"] or 0) // 3)
@@ -162,10 +170,12 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
 def local_clustering_coefficient(graph: Graph) -> DataFrame:
     """(vid, coefficient): C(v) = 2·t(v) / (deg(v)·(deg(v)−1)), 0 if deg<2
     (LocalClusteringCoefficient.java:125-135; degree without parallel
-    edges)."""
-    tc = triangle_count(graph)
-    return (
-        tc.per_node.join(_degrees(_canonical_edges(graph)), "vid", "left")
+    edges). Triangles and degrees share one cached canonical edge set,
+    materialized (cut_lineage) before it is released."""
+    edges = _canonical_edges(graph).persist()
+    lcc = cut_lineage(
+        _node_triangles(graph, edges, None)
+        .join(_degrees(edges), "vid", "left")
         .select(
             "vid",
             F.when(
@@ -176,6 +186,8 @@ def local_clustering_coefficient(graph: Graph) -> DataFrame:
             .alias("coefficient"),
         )
     )
+    edges.unpersist()
+    return lcc
 
 
 def average_clustering_coefficient(graph: Graph) -> float:

@@ -1,33 +1,155 @@
-"""Random walks + random-walk-with-restart graph sampling.
+"""Random walks and random-walk subgraph sampling.
 
 Reference surface:
   - gds.randomWalk (algo/.../walking/RandomWalk.java — node2vec-style
-    walks with return/in-out factors; we implement the uniform case)
-  - gds.graph.sample.rwr (graph-sampling/.../samplers/rw/rwr —
-    random walk with restart subgraph sampling; Gemulla-style)
+    walks with return/in-out factors): `random_walks` (uniform) and
+    `biased_random_walks` (the (p, q) walks node2vec trains on)
+  - gds.graph.sample.rwr / gds.graph.sample.cnarw
+    (graph-sampling/.../samplers/rw/rwr, rw/cnarw — random walk with
+    restart, plain or common-neighbor weighted): the subgraph induced by
+    every node a restarting walker stood on
 
-Spark-first: walker steps are pure hash functions of
-(seed, walker, step) — deterministic at any parallelism, no RNG state.
-One iteration = one join against the cached adjacency-list table and an
-element_at pick; walk state stays a DataFrame (walker, position, path).
+Spark-first: all four samplers run one walk step (`_walk`) on an
+in-memory PregelEngine — one job per step, the lineage cut by the engine,
+under pregel.loop_conf. Walker state is a DataFrame (walk_id, start, cur,
+path, stopped); each step left-joins it to the adjacency, cached on `cur`
+so the join reads it in place, and moves every walker to its sampler's
+pick, appending the pick to `path` (a null pick stops the walker). A run
+ends when no walker is active or after walk_length steps. A sampler
+supplies only its pick expression for step s; every coin is a pure hash
+of (seed, walk_id, s) — deterministic at any parallelism, no RNG state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import replace
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.operators.influence import _md5_u32
+from graph_data_science_spark.operators.pregel import PregelEngine, cache_on
 from graph_data_science_spark.plans.graph import Graph
 
 
-def _adjacency(graph: Graph) -> DataFrame:
-    """(vid, nbrs sorted array, deg) — cached per sampling run."""
+def _walkers(starts: DataFrame, walks_per_node: int, *extra: Column) -> DataFrame:
+    """(walk_id '<start>_<w>', start, cur, path, stopped, *extra):
+    walks_per_node walkers per start vid, each standing on its start."""
+    return starts.select(
+        F.col("vid").alias("start"),
+        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
+    ).select(
+        F.concat_ws("_", F.col("start"), F.col("w")).alias("walk_id"),
+        "start",
+        F.col("start").alias("cur"),
+        F.array(F.col("start")).alias("path"),
+        F.lit(False).alias("stopped"),
+        *extra,
+    )
+
+
+def _walk(
+    adj: DataFrame,  # (cur, ...) one row per node with out-edges
+    walkers: DataFrame,
+    pick: Callable[[int], Column],
+    walk_length: int,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Final walker state after up to walk_length steps, run as one step
+    on an in-memory PregelEngine. pick(s) is the next node at step s over
+    a walker's row left-joined to its adjacency row (null adjacency
+    columns at a sink); null stops the walker. `carry` re-derives the
+    walker's extra columns over the same row."""
+    adj = cache_on(adj, "cur")
+
+    def step(state: DataFrame, s: int) -> DataFrame:
+        nxt = F.when(~F.col("stopped"), pick(s))
+        return state.join(adj, "cur", "left").select(
+            "walk_id",
+            "start",
+            F.coalesce(nxt, F.col("cur")).alias("cur"),
+            F.when(nxt.isNotNull(), F.concat(F.col("path"), F.array(nxt)))
+            .otherwise(F.col("path"))
+            .alias("path"),
+            (F.col("stopped") | nxt.isNull()).alias("stopped"),
+            *carry,
+        )
+
+    result = PregelEngine(adj.sparkSession).run(
+        initial_state=walkers,
+        step=step,
+        stats_exprs=[F.sum((~F.col("stopped")).cast("long")).alias("active")],
+        converged=lambda st: (st["active"] or 0) == 0,
+        max_iterations=walk_length,
+    )
+    adj.unpersist()
+    return result.state
+
+
+def _xxhash(seed: int, s: int) -> Column:
+    return F.abs(F.xxhash64(F.lit(seed), F.col("walk_id"), F.lit(s)))
+
+
+def _unit(draw: Column) -> Column:
+    """draw mapped to [0, 1) in 2^-30 steps."""
+    return F.pmod(draw, F.lit(1 << 30)).cast("double") / F.lit(float(1 << 30))
+
+
+def _coins(coin: str, tag: str, seed: int, s: int, p: float) -> tuple[Column, Column]:
+    """(restart, draw) for step s: restart holds with probability p; draw
+    is a non-negative long. coin="md5" is the engine-portable family the
+    DuckDB oracles replay (see operators/influence._md5_u32)."""
+    if coin == "md5":
+        def md5(kind: str) -> Column:
+            return _md5_u32(F.lit(tag), F.lit(kind), F.lit(str(seed)), F.col("walk_id"), F.lit(str(s)))
+
+        return md5("r") < F.lit(int(p * (1 << 32))), md5("i")
+    restart = F.pmod(_xxhash(seed + 1, s), F.lit(1 << 30)) < int(p * (1 << 30))
+    return restart, _xxhash(seed, s)
+
+
+def _uniform_pick(draw: Column) -> Column:
+    """nbrs[draw mod deg]; null at a sink."""
+    return F.when(
+        F.col("deg") > 0,
+        F.element_at(F.col("nbrs"), (F.pmod(draw, F.col("deg")) + 1).cast("int")),
+    )
+
+
+def _roulette(nbrs: str, r: Column, wt: Callable[[Column], Column]) -> Column:
+    """Cumulative-weight pick: the dst of the first element x of `nbrs`
+    at which the running remainder of r (in [0, total weight)) falls
+    below wt(x) — the deterministic analogue of roulette sampling."""
+    none = F.lit(None).cast("long").alias("pick")
+    return F.aggregate(
+        nbrs,
+        F.struct(r.alias("rem"), none),
+        lambda acc, x: F.when(acc["pick"].isNotNull(), acc)
+        .when(acc["rem"] < wt(x), F.struct(acc["rem"].alias("rem"), x["dst"].alias("pick")))
+        .otherwise(F.struct((acc["rem"] - wt(x)).alias("rem"), none)),
+    )["pick"]
+
+
+def _uniform_adjacency(graph: Graph) -> DataFrame:
+    """(cur, nbrs sorted array, deg)."""
     return (
-        graph.edges.groupBy(F.col("src").alias("vid"))
+        graph.edges.groupBy(F.col("src").alias("cur"))
         .agg(F.array_sort(F.collect_list("dst")).alias("nbrs"))
         .withColumn("deg", F.size("nbrs"))
-        .persist()
     )
+
+
+def _induced_sample(graph: Graph, walks: DataFrame, suffix: str) -> Graph:
+    """The subgraph induced by every node on a walker's path."""
+    visited = walks.select(F.explode("path").alias("vid")).distinct()
+    kept_nodes = graph.nodes.join(visited, "vid", "left_semi")
+    kept_edges = (
+        graph.edges.join(visited.withColumnRenamed("vid", "src"), "src", "left_semi")
+        .join(visited.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+        .select("src", "dst", "weight")
+    )
+    return replace(graph, nodes=kept_nodes, edges=kept_edges, name=f"{graph.name or 'g'}_{suffix}")
 
 
 def random_walks(
@@ -43,44 +165,11 @@ def random_walks(
     mod degree — the deterministic analogue of the reference's seeded
     uniform sampler.
     """
-    adj = _adjacency(graph)
-    starts = (start_nodes or graph.nodes).select("vid")
-    walkers = starts.select(
-        F.col("vid").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
-    ).select(
-        F.concat_ws("_", F.col("start"), F.col("w")).alias("walk_id"),
-        "start",
-        F.col("start").alias("cur"),
-        F.array(F.col("start")).alias("path"),
-        F.lit(False).alias("stopped"),
+    walkers = _walkers((start_nodes or graph.nodes).select("vid"), walks_per_node)
+    walks = _walk(
+        _uniform_adjacency(graph), walkers, lambda s: _uniform_pick(_xxhash(seed, s)), walk_length
     )
-    state = walkers.persist()
-    for step in range(walk_length):
-        nbr = adj.select(F.col("vid").alias("cur"), "nbrs", "deg")
-        joined = state.join(nbr, "cur", "left")
-        idx = F.pmod(
-            F.abs(F.xxhash64(F.lit(seed), F.col("walk_id"), F.lit(step))), F.col("deg")
-        )
-        nxt = F.when(
-            ~F.col("stopped") & F.col("deg").isNotNull() & (F.col("deg") > 0),
-            F.element_at(F.col("nbrs"), (idx + 1).cast("int")),
-        )
-        new_state = joined.select(
-            "walk_id",
-            "start",
-            F.coalesce(nxt, F.col("cur")).alias("cur"),
-            F.when(nxt.isNotNull(), F.concat(F.col("path"), F.array(nxt)))
-            .otherwise(F.col("path"))
-            .alias("path"),
-            (F.col("stopped") | nxt.isNull()).alias("stopped"),
-        ).persist()
-        new_state.count()
-        state.unpersist()
-        state = new_state
-    out = state.select("walk_id", "start", "path")
-    adj.unpersist()
-    return out
+    return walks.select("walk_id", "start", "path")
 
 
 def sample_cnarw(
@@ -130,7 +219,7 @@ def sample_cnarw(
         .select(
             "src", "dst", (F.lit(1.0) + F.coalesce("cn", F.lit(0))).alias("wt")
         )
-        .groupBy(F.col("src").alias("vid"))
+        .groupBy(F.col("src").alias("cur"))
         .agg(
             F.array_sort(F.collect_list(F.struct("dst", "wt"))).alias("nbrs"),
         )
@@ -138,91 +227,22 @@ def sample_cnarw(
             "total_wt",
             F.aggregate("nbrs", F.lit(0.0), lambda a, x: a + x["wt"]),
         )
-        .persist()
     )
-    walkers = start_nodes.select(
-        F.col("vid").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
-    ).select(
-        F.concat_ws("_", F.col("start"), F.col("w")).alias("walk_id"),
-        "start",
-        F.col("start").alias("cur"),
-    )
-    visited = walkers.select(F.col("cur").alias("vid"))
-    state = walkers.persist()
-    p_scaled = int(restart_probability * (1 << 30))
-    p32 = int(restart_probability * (1 << 32))
-    for step in range(walk_length):
-        nbr = weighted_adj.select(F.col("vid").alias("cur"), "nbrs", "total_wt")
-        joined = state.join(nbr, "cur", "left")
-        if coin == "md5":
-            from graph_data_science_spark.operators.influence import _md5_u32
 
-            restart = _md5_u32(F.lit("cnarw"), F.lit("r"), F.lit(str(seed)),
-                               F.col("walk_id"), F.lit(str(step))) < F.lit(p32)
-            # integer roulette: weights are integral (1 + cn), so
-            # r = coin % total and an integer remaining-weight fold are
-            # exact — replayable as a prefix-sum pick in the oracle
-            total_long = F.aggregate(
-                "nbrs", F.lit(0).cast("long"),
-                lambda a, x: a + x["wt"].cast("long"),
-            )
-            r = F.pmod(
-                _md5_u32(F.lit("cnarw"), F.lit("i"), F.lit(str(seed)),
-                         F.col("walk_id"), F.lit(str(step))),
-                total_long,
-            )
-            rem_is_long = True
+    def pick(s: int) -> Column:
+        restart, draw = _coins(coin, "cnarw", seed, s, restart_probability)
+        if coin == "md5":
+            # the weights are integral, so the double total is exact
+            r = F.pmod(draw, F.col("total_wt").cast("long"))
+            picked = _roulette("nbrs", r, lambda x: x["wt"].cast("long"))
         else:
-            restart = (
-                F.pmod(F.abs(F.xxhash64(F.lit(seed + 1), F.col("walk_id"), F.lit(step))),
-                       F.lit(1 << 30))
-                < p_scaled
-            )
-            # weighted pick: fold cumulative weights against a hash in
-            # [0, total_wt) — the deterministic analogue of roulette sampling
-            r = (
-                F.pmod(F.abs(F.xxhash64(F.lit(seed), F.col("walk_id"), F.lit(step))),
-                       F.lit(1 << 30)).cast("double")
-                / F.lit(float(1 << 30))
-                * F.col("total_wt")
-            )
-            rem_is_long = False
-        wt_of = (lambda x: x["wt"].cast("long")) if rem_is_long else (lambda x: x["wt"])
-        picked = F.aggregate(
-            "nbrs",
-            F.struct(r.alias("rem"), F.lit(None).cast("long").alias("pick")),
-            lambda acc, x: F.when(acc["pick"].isNotNull(), acc)
-            .when(
-                acc["rem"] < wt_of(x),
-                F.struct(acc["rem"].alias("rem"), x["dst"].alias("pick")),
-            )
-            .otherwise(
-                F.struct((acc["rem"] - wt_of(x)).alias("rem"),
-                         F.lit(None).cast("long").alias("pick"))
-            ),
-        )["pick"]
-        nxt = F.when(restart, F.col("start")).otherwise(
+            picked = _roulette("nbrs", _unit(draw) * F.col("total_wt"), lambda x: x["wt"])
+        return F.when(restart, F.col("start")).otherwise(
             F.coalesce(picked, F.col("start"))  # sink -> restart
         )
-        new_state = joined.select("walk_id", "start", nxt.alias("cur")).persist()
-        new_state.count()
-        state.unpersist()
-        state = new_state
-        visited = visited.unionByName(state.select(F.col("cur").alias("vid")))
-    keep = visited.distinct().persist()
-    kept_nodes = graph.nodes.join(keep, "vid", "left_semi")
-    kept_edges = (
-        graph.edges.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
-        .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-        .select("src", "dst", "weight")
-    )
-    weighted_adj.unpersist()
-    from dataclasses import replace
 
-    return replace(
-        graph, nodes=kept_nodes, edges=kept_edges, name=f"{graph.name or 'g'}_cnarw"
-    )
+    walks = _walk(weighted_adj, _walkers(start_nodes, walks_per_node), pick, walk_length)
+    return _induced_sample(graph, walks, "cnarw")
 
 
 def sample_rwr(
@@ -242,63 +262,15 @@ def sample_rwr(
     coin="md5" swaps both per-step coins for the engine-portable md5
     family so the graph_sample_rwr DuckDB oracle replays the walks.
     """
-    adj = _adjacency(graph)
-    walkers = start_nodes.select(
-        F.col("vid").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
-    ).select(
-        F.concat_ws("_", F.col("start"), F.col("w")).alias("walk_id"),
-        "start",
-        F.col("start").alias("cur"),
-    )
-    visited = walkers.select(F.col("cur").alias("vid"))
-    state = walkers.persist()
-    p_scaled = int(restart_probability * (1 << 30))
-    p32 = int(restart_probability * (1 << 32))
-    for step in range(walk_length):
-        nbr = adj.select(F.col("vid").alias("cur"), "nbrs", "deg")
-        joined = state.join(nbr, "cur", "left")
-        if coin == "md5":
-            from graph_data_science_spark.operators.influence import _md5_u32
 
-            restart = _md5_u32(F.lit("rwr"), F.lit("r"), F.lit(str(seed)),
-                               F.col("walk_id"), F.lit(str(step))) < F.lit(p32)
-            idx = F.pmod(
-                _md5_u32(F.lit("rwr"), F.lit("i"), F.lit(str(seed)),
-                         F.col("walk_id"), F.lit(str(step))),
-                F.col("deg"),
-            )
-        else:
-            restart = (
-                F.pmod(F.abs(F.xxhash64(F.lit(seed + 1), F.col("walk_id"), F.lit(step))),
-                       F.lit(1 << 30))
-                < p_scaled
-            )
-            idx = F.pmod(
-                F.abs(F.xxhash64(F.lit(seed), F.col("walk_id"), F.lit(step))), F.col("deg")
-            )
-        nxt = F.when(restart, F.col("start")).otherwise(
-            F.when(
-                F.col("deg").isNotNull() & (F.col("deg") > 0),
-                F.element_at(F.col("nbrs"), (idx + 1).cast("int")),
-            ).otherwise(F.col("start"))  # sink -> restart
+    def pick(s: int) -> Column:
+        restart, draw = _coins(coin, "rwr", seed, s, restart_probability)
+        return F.when(restart, F.col("start")).otherwise(
+            F.coalesce(_uniform_pick(draw), F.col("start"))  # sink -> restart
         )
-        new_state = joined.select("walk_id", "start", nxt.alias("cur")).persist()
-        new_state.count()
-        state.unpersist()
-        state = new_state
-        visited = visited.unionByName(state.select(F.col("cur").alias("vid")))
-    keep = visited.distinct().persist()
-    kept_nodes = graph.nodes.join(keep, "vid", "left_semi")
-    kept_edges = (
-        graph.edges.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
-        .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-        .select("src", "dst", "weight")
-    )
-    adj.unpersist()
-    from dataclasses import replace
 
-    return replace(graph, nodes=kept_nodes, edges=kept_edges, name=f"{graph.name or 'g'}_rwr")
+    walks = _walk(_uniform_adjacency(graph), _walkers(start_nodes, walks_per_node), pick, walk_length)
+    return _induced_sample(graph, walks, "rwr")
 
 
 def biased_random_walks(
@@ -320,95 +292,40 @@ def biased_random_walks(
     Spark-first: the whole transition — bias computation, cumulative
     roulette pick against a deterministic hash — runs inside ARRAY
     expressions on the cached adjacency struct (no explode, no window);
-    one join per step. The previous node's neighbor-id array is carried
-    forward from the previous step's join, so adjacency is joined
-    exactly once per step."""
+    one join per step. prev is the path's second-to-last node, and its
+    neighbor-id array is carried forward from the previous step's join,
+    so adjacency is joined exactly once per step."""
     adj = (
-        graph.edges.groupBy(F.col("src").alias("vid"))
+        graph.edges.groupBy(F.col("src").alias("cur"))
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("dst").alias("dst"), F.col("weight").alias("w")))
             ).alias("nbrs_w")
         )
         .withColumn("nbr_ids", F.transform("nbrs_w", lambda x: x["dst"]))
-        .persist()
     )
-    starts = (start_nodes or graph.nodes).select("vid")
-    state = starts.select(
-        F.col("vid").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("wk"),
-    ).select(
-        F.concat_ws("_", F.col("start"), F.col("wk")).alias("walk_id"),
-        "start",
-        F.lit(None).cast("long").alias("prev"),
-        F.col("start").alias("cur"),
-        F.lit(None).cast("array<long>").alias("prev_nbr_ids"),
-        F.array(F.col("start")).alias("path"),
-        F.lit(False).alias("stopped"),
-    ).persist()
     inv_p = 1.0 / return_factor
     inv_q = 1.0 / in_out_factor
-    for step in range(walk_length):
-        nbr = adj.select(F.col("vid").alias("cur"), "nbrs_w", "nbr_ids")
-        joined = state.join(nbr, "cur", "left")
-        # alpha per candidate (first step: prev is null -> alpha = 1)
-        biased = F.transform(
-            "nbrs_w",
-            lambda x: F.struct(
-                x["dst"].alias("dst"),
-                (
-                    x["w"]
-                    * F.when(F.col("prev").isNull(), F.lit(1.0))
-                    .when(x["dst"] == F.col("prev"), F.lit(inv_p))
-                    .when(
-                        F.array_contains(F.col("prev_nbr_ids"), x["dst"]),
-                        F.lit(1.0),
-                    )
-                    .otherwise(F.lit(inv_q))
-                ).alias("wt"),
-            ),
+    prev = F.try_element_at("path", F.lit(-2))  # null on the first step
+
+    def wt(x: Column) -> Column:
+        return x["w"] * (
+            F.when(prev.isNull(), F.lit(1.0))
+            .when(x["dst"] == prev, F.lit(inv_p))
+            .when(F.array_contains(F.col("prev_nbr_ids"), x["dst"]), F.lit(1.0))
+            .otherwise(F.lit(inv_q))
         )
-        joined = joined.withColumn("biased", biased).withColumn(
-            "total_wt", F.aggregate("biased", F.lit(0.0), lambda a, x: a + x["wt"])
-        )
-        r = (
-            F.pmod(F.abs(F.xxhash64(F.lit(seed), F.col("walk_id"), F.lit(step))),
-                   F.lit(1 << 30)).cast("double")
-            / F.lit(float(1 << 30))
-            * F.col("total_wt")
-        )
-        picked = F.aggregate(
-            "biased",
-            F.struct(r.alias("rem"), F.lit(None).cast("long").alias("pick")),
-            lambda acc, x: F.when(acc["pick"].isNotNull(), acc)
-            .when(
-                acc["rem"] < x["wt"],
-                F.struct(acc["rem"].alias("rem"), x["dst"].alias("pick")),
-            )
-            .otherwise(
-                F.struct((acc["rem"] - x["wt"]).alias("rem"),
-                         F.lit(None).cast("long").alias("pick"))
-            ),
-        )["pick"]
-        nxt = F.when(
-            ~F.col("stopped") & (F.col("total_wt") > 0), picked
-        )
-        new_state = joined.select(
-            "walk_id",
-            "start",
-            F.when(nxt.isNotNull(), F.col("cur")).otherwise(F.col("prev")).alias("prev"),
-            F.coalesce(nxt, F.col("cur")).alias("cur"),
-            F.when(nxt.isNotNull(), F.col("nbr_ids"))
-            .otherwise(F.col("prev_nbr_ids"))
-            .alias("prev_nbr_ids"),
-            F.when(nxt.isNotNull(), F.concat(F.col("path"), F.array(nxt)))
-            .otherwise(F.col("path"))
-            .alias("path"),
-            (F.col("stopped") | nxt.isNull()).alias("stopped"),
-        ).persist()
-        new_state.count()
-        state.unpersist()
-        state = new_state
-    out = state.select("walk_id", "start", "path")
-    adj.unpersist()
-    return out
+
+    def pick(s: int) -> Column:
+        total = F.aggregate("nbrs_w", F.lit(0.0), lambda a, x: a + wt(x))
+        return F.when(total > 0, _roulette("nbrs_w", _unit(_xxhash(seed, s)) * total, wt))
+
+    walkers = _walkers(
+        (start_nodes or graph.nodes).select("vid"),
+        walks_per_node,
+        F.lit(None).cast("array<long>").alias("prev_nbr_ids"),
+    )
+    walks = _walk(
+        adj, walkers, pick, walk_length, carry=(F.col("nbr_ids").alias("prev_nbr_ids"),)
+    )
+    return walks.select("walk_id", "start", "path")

@@ -25,6 +25,7 @@ from graph_data_science_spark.operators.pregel import LOOP_CONF, PregelEngine
 from graph_data_science_spark.operators.wcc import wcc
 from graph_data_science_spark.plans.graph import Graph
 from graph_data_science_spark.sources.generator import random_graph
+from graph_data_science_spark.sources.sampling import biased_random_walks, random_walks, sample_rwr
 from tests.fixtures import pagerank_graph, wcc_chain_graph
 
 
@@ -198,6 +199,16 @@ def test_pagerank_superstep_is_one_job(spark):
     assert jobs[6] - jobs[3] == 3
 
 
+def test_random_walk_step_is_one_job(spark):
+    # walkers on the 1 <-> 2 cycle never stop, so every step runs
+    g = pagerank_graph(spark)
+    jobs = {
+        k: _jobs_in_group(spark, f"rw-jobs-{k}", lambda: random_walks(g, 1, k).collect())
+        for k in (3, 6)
+    }
+    assert jobs[6] - jobs[3] == 3
+
+
 def test_loop_conf_restored_when_a_step_raises(spark):
     conf = spark.conf
     keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
@@ -316,6 +327,9 @@ _OPS = {
     "hits": lambda g: hits(g, hits_iterations=3, tolerance=0),
     "eigenvector": lambda g: eigenvector(g, max_iterations=3, tolerance=0),
     "bfs": lambda g: bfs(g, [0], max_iterations=3),
+    "random_walks": lambda g: random_walks(g, 1, 3),
+    "sample_rwr": lambda g: sample_rwr(g, g.nodes.filter(F.col("vid") < 30), walk_length=3),
+    "biased_random_walks": lambda g: biased_random_walks(g, 1, 3, 0.5, 2.0),
 }
 
 

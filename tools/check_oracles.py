@@ -42,19 +42,20 @@ SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # Measured Spark seconds per query (round-5 full gate, local cores=8; the
-# path and triangle entries re-measured in a full gate on a 4-core host) —
+# path, triangle, clustering and walk-sampler entries re-measured in a full
+# gate on a 4-core host) —
 # only used to BALANCE the process shards; unknown names default to 3 s.
 _WEIGHTS = {
-    "graph_yens": 99.6, "graph_sample_cnarw": 22.3, "graph_modopt": 31.3, "graph_louvain": 42.7, "graph_node2vec": 34.8, "graph_leiden": 29.3,
+    "graph_yens": 99.6, "graph_sample_cnarw": 8.5, "graph_modopt": 31.3, "graph_louvain": 42.7, "graph_node2vec": 9.2, "graph_leiden": 29.3,
     "graph_steiner": 32.7, "graph_pagerank": 18.0, "graph_astar": 14.4,
     "graph_k_spanning_tree": 13.0, "graph_longest_path": 10.7,
     "graph_spanning_tree": 8.7, "graph_betweenness_tree": 8.5,
     "graph_maxkcut": 8.4, "graph_graphsage": 8.4, "graph_eigenvector": 7.5,
     "graph_triangle_per_node": 11.6, "graph_scc": 5.8, "graph_bellman": 6.2,
     "graph_sssp_paths": 8.5, "graph_hits": 4.9, "graph_fastrp": 4.9,
-    "graph_sample_rwr": 4.7, "dedup_minhash_lsh": 4.6, "graph_closeness": 4.5,
+    "graph_sample_rwr": 3.0, "dedup_minhash_lsh": 4.6, "graph_closeness": 4.5,
     "graph_all_shortest_paths": 4.4, "graph_kcore": 4.2,
-    "graph_triangle_global": 9.7, "graph_local_clustering": 3.9,
+    "graph_triangle_global": 9.7, "graph_local_clustering": 9.1,
     "graph_harmonic": 3.9, "graph_celf": 3.8, "graph_topo_sort": 3.8,
     "graph_pagerank_weighted": 3.6, "multimodal_features": 3.3,
     "ann_lsh_topk": 3.2, "graph_lpa": 3.0, "graph_sllpa": 2.9,
